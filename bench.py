@@ -18,8 +18,13 @@ evidenced in-sandbox (no real cluster; see BENCH.md):
     python bench.py --scaling [n_turns]
 Generates a deterministic synthetic transcript table Spark-side
 (``spark.range`` + column expressions — executor-parallel, no driver loop),
-then runs the identical flagship curate job at local[8] and local[32] and
-reports throughput at both plus efficiency ``(T_8/T_32)/4``.
+then runs the identical flagship curate job at local[N] and local[4N]
+(N defaults to a quarter of the host's cores) and reports throughput at
+both plus efficiency ``(T_N/T_4N)/4``.
+
+Cores default to ``$SPARK_GRAFT_CPUS``, else the host's ``os.cpu_count()``;
+the driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` (default 8g, session.py) and
+scratch files go where Spark puts them (``SPARK_LOCAL_DIRS``, else /tmp).
 """
 
 from __future__ import annotations
@@ -93,7 +98,7 @@ def run_headline() -> dict:
     from data_harvesting_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     idle_before = host_idle_probe()
     spark = get_spark("bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
@@ -153,7 +158,7 @@ def run_headline() -> dict:
 
 
 # --------------------------------------------------------------------------
-# Scaling mode: local[8] vs local[32] on the same generated input
+# Scaling mode: local[N] vs local[4N] on the same generated input
 # --------------------------------------------------------------------------
 
 SCALE_DATA = "/tmp/dhs_bench_transcripts"
@@ -179,7 +184,7 @@ def generate_scale_input(n_turns: int, out_dir: str = SCALE_DATA) -> str:
         except (OSError, ValueError):
             pass
         shutil.rmtree(out_dir, ignore_errors=True)  # stale: different n
-    spark = get_spark("bench-gen", master="local[32]")
+    spark = get_spark("bench-gen")
     spark.sparkContext.setLogLevel("ERROR")
     turns_per_conv = 40
     df = (
@@ -268,17 +273,6 @@ def _curate_timed(cores: int, data_dir: str, shuffle_partitions: int = 128) -> f
         f"bench-scale-{cores}",
         master=f"local[{cores}]",
         shuffle_partitions=shuffle_partitions,
-        # tmpfs shuffle dir: on a real cluster every node brings its own
-        # shuffle disks, so disk bandwidth scales with executor count; on
-        # this single box a shared disk would be an artificial serial
-        # bottleneck the criterion isn't about. With shuffle bytes in
-        # tmpfs, compression only burns CPU — off for the bench; on a
-        # disk/network cluster it stays on.
-        extra_conf={
-            "spark.local.dir": "/dev/shm/spark-local",
-            "spark.shuffle.compress": "false",
-            "spark.shuffle.spill.compress": "false",
-        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     t = spark.read.parquet(data_dir)
@@ -290,7 +284,8 @@ def _curate_timed(cores: int, data_dir: str, shuffle_partitions: int = 128) -> f
     return dt
 
 
-def run_scaling(n_turns: int, lo_cores: int = 8, rounds: int = 4) -> dict:
+def run_scaling(n_turns: int, lo_cores: int | None = None,
+                rounds: int = 4) -> dict:
     """N vs 4N cores on identical input (north_rule scaling criterion).
 
     The sandbox VM has bursty hypervisor steal, so the two levels are
@@ -298,7 +293,7 @@ def run_scaling(n_turns: int, lo_cores: int = 8, rounds: int = 4) -> dict:
     same noise windows) and the per-level minimum is the steady-state
     estimate. Round 0 is JIT warmup.
     """
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
+    lo_cores = lo_cores or max(1, (os.cpu_count() or 4) // 4)
     hi_cores = lo_cores * 4
     shutil.rmtree(SCALE_DATA, ignore_errors=True)
     idle_before = host_idle_probe()
@@ -341,44 +336,39 @@ def run_scaling(n_turns: int, lo_cores: int = 8, rounds: int = 4) -> dict:
 
 
 def run_streaming(
-    n_turns: int, cores: int = 32, n_slices: int = 8, mode: str = "kernel",
-    cap_scope: str = "conversation",
+    n_turns: int, cores: int | None = None, n_slices: int = 8,
+    mode: str = "session_window", cap_scope: str = "conversation",
 ) -> dict:
     """End-to-end STREAMING curated-turns/sec (BASELINE.json metric shape):
-    generated transcript slices → checkpointed stateful correlator →
-    idempotent epoch sink, run to completion with availableNow.
+    generated transcript slices → checkpointed streaming job → idempotent
+    epoch sink, run to completion with availableNow. ``mode``:
+    "session_window" (the curate job), or the pattern / timeout / dedup /
+    neardup / sketch job on the same input.
 
-    Known tail artifact of finite-input availableNow benching (measured,
-    ~0.05% of rows at 4M): sessions ending within ``gap + watermark_delay``
-    of the stream's max event time cannot close (the watermark never
-    passes them), and the kernel runner's event-time TIMERS only fire in a
-    no-data batch, which availableNow never runs — so the kernel leg
-    under-emits a few borderline tail sessions the JVM aggregation still
-    flushes. Diagnosed by full outer join of both runners' outputs at 1M:
-    zero kernel-only rows, the session_window extras all in the final
-    event-time band. Production streams run forever (timers fire
-    naturally); finite replays wanting complete output use ``drain()``
-    (tests do) or a flush event — throughput, the metric here, is
-    unaffected either way."""
+    Known tail artifact of finite-input benching: sessions ending within
+    ``gap + watermark_delay`` of the stream's max event time cannot close,
+    because the watermark never passes them. On Spark 4.1.2 availableNow
+    runs one no-data batch after the last data batch, so every session the
+    final watermark does pass is closed and curated. Finite replays wanting
+    complete output add a far-future flush event (tests and perfbench do);
+    throughput, the metric here, is unaffected either way."""
     import tempfile
 
     from data_harvesting_spark.config import HarvestConfig
     from data_harvesting_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
+    cores = cores or os.cpu_count() or 1
     data_dir = generate_scale_input(n_turns)
     # re-slice into n_slices files so the run is a multi-batch stream.
     # shuffle partitions = cores exactly: each extra partition is another
     # RocksDB state-store instance opened+committed per micro-batch
     spark = get_spark(f"bench-stream-{cores}", master=f"local[{cores}]",
-                      shuffle_partitions=cores,
-                      extra_conf={"spark.local.dir": "/dev/shm/spark-local"})
+                      shuffle_partitions=cores)
     spark.sparkContext.setLogLevel("ERROR")
     src = tempfile.mkdtemp(prefix="dhs_stream_src_")
     _slice_for_replay(spark, data_dir, src, n_slices)
 
     from data_harvesting_spark.streaming.pipeline import (
-        start_curate_job,
         start_curate_job_session_window,
         start_dedup_stream_job,
         start_neardup_stream_job,
@@ -409,11 +399,10 @@ def run_streaming(
                 checkpoint_dir=cfg.checkpoint_dir,
                 available_now=available_now,
             )
+    elif mode == "session_window":
+        starter = start_curate_job_session_window
     else:
-        starter = (
-            start_curate_job_session_window if mode == "session_window"
-            else start_curate_job
-        )
+        raise ValueError(f"unknown stream mode {mode!r}")
     work = tempfile.mkdtemp(prefix="dhs_stream_run_")
     cfg = HarvestConfig(
         session_gap="30 minutes",
@@ -504,9 +493,8 @@ def prepare_stream_source(n_turns: int, out_dir: str, n_slices: int = 8) -> str:
     (``_slice_for_replay``) in a dedicated session."""
     from data_harvesting_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
     data_dir = generate_scale_input(n_turns)
-    spark = get_spark("bench-src", master="local[32]")
+    spark = get_spark("bench-src")
     spark.sparkContext.setLogLevel("ERROR")
     _slice_for_replay(spark, data_dir, out_dir, n_slices)
     spark.stop()
@@ -523,13 +511,13 @@ if __name__ == "__main__":
         print(json.dumps(run_ceiling(lo)))
     elif len(sys.argv) > 1 and sys.argv[1] == "--scaling":
         n = int(sys.argv[2]) if len(sys.argv) > 2 else 24_000_000
-        lo = int(sys.argv[3]) if len(sys.argv) > 3 else 8
+        lo = int(sys.argv[3]) if len(sys.argv) > 3 else None
         rounds = int(sys.argv[4]) if len(sys.argv) > 4 else 4
         print(json.dumps(run_scaling(n, lo_cores=lo, rounds=rounds)))
     elif len(sys.argv) > 1 and sys.argv[1] == "--stream":
         n = int(sys.argv[2]) if len(sys.argv) > 2 else 4_000_000
-        cores = int(sys.argv[3]) if len(sys.argv) > 3 else 32
-        mode = sys.argv[4] if len(sys.argv) > 4 else "kernel"
+        cores = int(sys.argv[3]) if len(sys.argv) > 3 else None
+        mode = sys.argv[4] if len(sys.argv) > 4 else "session_window"
         scope = sys.argv[5] if len(sys.argv) > 5 else "conversation"
         print(json.dumps(run_streaming(n, cores, mode=mode, cap_scope=scope)))
     else:

@@ -16,9 +16,10 @@ Architecture (Spark-first, NOT a port):
 - DataFrame API + vectorized Arrow/pandas UDFs only; no per-row Python, no
   RDDs, no custom Catalyst rules.
 - streaming: Structured Streaming micro-batches, event-time watermarks,
-  session windows, ``applyInPandasWithState`` for the stateful
-  call↔response correlator, foreachBatch idempotent merge sink keyed
-  ``(conv_id, window_start)``.
+  JVM session windows whose closed sessions the declarative curate
+  pipeline correlates call↔response in foreachBatch, idempotent merge sink
+  keyed ``(conv_id, window_start)``; ``applyInPandasWithState`` only for
+  the per-key handlers of the SFT, pattern, timeout, CEP and SCD2 jobs.
 """
 
 from data_harvesting_spark.config import HarvestConfig

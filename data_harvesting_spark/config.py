@@ -36,19 +36,19 @@ class HarvestConfig:
     # non-sessionized flagship `curate()` treats the whole conversation as
     # one session, so both scopes coincide there.
     cap_scope: str = "conversation"
-    # conversation-scope streaming only: how long the kernel runner retains
-    # a conversation's (emitted, suppress_until) counters after its last
-    # session closed, so a later session continues the count instead of
-    # restarting at 0. When min_pairs_per_conv > 1 and the gate failed with
-    # pairs present, the runner retains the un-emitted BUFFER for the same
-    # window so a later session pools toward the gate, exactly as batch
-    # pools the whole conversation. Exact batch parity therefore holds —
-    # gate-failing conversations included — whenever inter-session
-    # event-time gaps stay under this retention; beyond it the stream
-    # (correctly, and by documented design) treats the conversation as
-    # finished. The session-window runner's cap ledger (and, when
-    # min_pairs_per_conv > 1, its pending below-gate pool) evicts on the
-    # same retention (streaming/pipeline.py).
+    # conversation-scope streaming only: how long the curate job's cap
+    # ledger retains a conversation's (emitted, suppress_until) counters
+    # after its last session closed, so a later session continues the
+    # count instead of restarting at 0. When min_pairs_per_conv > 1, the
+    # ledger's pending pool keeps a gate-failed conversation's un-emitted
+    # pairs for the same window so a later session pools toward the gate,
+    # exactly as batch pools the whole conversation. Exact batch parity
+    # therefore holds — gate-failing conversations included — whenever
+    # inter-session event-time gaps stay under this retention; beyond it
+    # the stream (by documented design) treats the conversation as
+    # finished (streaming/pipeline.py::_cap_with_ledger). The near-dup,
+    # boilerplate and training-export ledgers and the SFT, pattern and
+    # sequence-pattern state handlers reuse the same retention.
     cap_state_retention: str = "7 days"
     # P10 — post-emission suppression window, in turns
     # (reference: FRAMES_SKIP_AFTER_DETECT)
@@ -71,15 +71,10 @@ class HarvestConfig:
     response_role: str = "tool"
     # allowed roles (P2 class allow-list analog); empty = all
     allowed_roles: tuple[str, ...] = ()
-    # skew handling (M5): number of salt buckets for hot conv_ids; 0 = off
-    salt_buckets: int = 0
     # sink
     sink_path: str = ""
     checkpoint_dir: str = ""
     sink_format: str = "parquet-merge"  # or "iceberg" when jars present
-
-    # streaming state
-    state_timeout: str = "EventTimeTimeout"
 
     extra: dict = field(default_factory=dict, hash=False, compare=False)
 
@@ -88,26 +83,16 @@ class ConfigError(ValueError):
     """Raised when a pipeline is built from an inconsistent config."""
 
 
-def validate_config(
-    cfg: HarvestConfig, streaming_runner: str | None = None
-) -> HarvestConfig:
+def validate_config(cfg: HarvestConfig) -> HarvestConfig:
     """J4 — registration-integrity analog: the reference asserts each
     registered module's name matches the env config before running
     (`/root/reference/services/harvest_service.py:63-82`); here the build
     step asserts the config is self-consistent before a plan is built.
 
-    ``streaming_runner`` ("kernel" | "session_window") additionally rejects
-    combinations a given streaming architecture cannot implement exactly,
-    instead of silently diverging from batch semantics:
-
-    - (historical) conversation-scope ``min_pairs_per_conv > 1`` needs the
-      whole conversation before emitting anything. The KERNEL runner
-      implements it exactly by deferring emission to the conversation's
-      event-time timeout (streaming/state.py); since r3 the session-window
-      runner implements it too, by POOLING below-gate pairs in a pending
-      buffer beside its cap ledger (streaming/pipeline.py::_cap_with_ledger)
-      — so no streaming rejection remains. (Conversation-scope cap,
-      suppression, and min gate are streaming-exact in both runners.)
+    Every valid config is streaming-exact: conversation-scope cap,
+    suppression and min gate ride the curate job's cap ledger
+    (streaming/pipeline.py::_cap_with_ledger), the min gate by POOLING
+    below-gate pairs in a pending buffer beside it.
     """
     from data_harvesting_spark.streaming.sink import SINKS
 

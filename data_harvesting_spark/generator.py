@@ -175,12 +175,6 @@ def write_parquet_us(df: pd.DataFrame, path: str) -> str:
     return path
 
 
-def write_transcripts(path: str, n_convs: int = 100, seed: int = 42) -> str:
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    df = generate_transcripts(n_convs=n_convs, seed=seed)
-    return write_parquet_us(df, path)
-
-
 def write_batches(dirpath: str, n_convs: int = 100, seed: int = 42, n_batches: int = 8):
     """F5 streaming-replay layout: ordered micro-batch slices.
 

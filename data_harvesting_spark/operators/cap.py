@@ -11,8 +11,9 @@ prior keeps. It runs as an ``applyInPandas`` per-conversation sweep:
 Arrow-batched, grouped by the same conv_id hash partitioning every other
 operator uses, with a tight numpy loop only over each group's qualifying
 rows (bounded by the cap, so O(cap) per key regardless of conversation
-length — the 100 TB-safe property). The streaming path keeps the cursor in
-``applyInPandasWithState`` state instead (streaming/state.py).
+length — the 100 TB-safe property). The streaming curate job starts each
+conversation's sweep from the cursor carried in its cap ledger
+(streaming/pipeline.py::_cap_with_ledger).
 """
 
 from __future__ import annotations

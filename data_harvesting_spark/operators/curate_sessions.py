@@ -1,8 +1,8 @@
 """Batch runner for the sessionized curate pipeline (kernel-backed).
 
-The ``single-shot.py`` analog (reference E2): same kernel the streaming
-state handler emits with, applied per conversation group. One shuffle on
-conv_id; Arrow-batched pandas per group.
+The ``single-shot.py`` analog (reference E2): the pandas kernel applied
+per conversation group — the batch reference the streaming curate job is
+checked against. One shuffle on conv_id; Arrow-batched pandas per group.
 """
 
 from __future__ import annotations

@@ -35,19 +35,6 @@ def funnel_stage_mins(events: DataFrame) -> DataFrame:
     )
 
 
-def merge_stage_mins(prior: DataFrame, batch: DataFrame) -> DataFrame:
-    """Fold two stage-min tables: per user, per stage, the earlier
-    timestamp wins (first-touch). Commutative + associative, so epochs
-    and replays compose in any order."""
-    cols = [f"t_{s}" for s in FUNNEL_STAGES]
-    return (
-        prior.select("user_id", *cols)
-        .unionByName(batch.select("user_id", *cols))
-        .groupBy("user_id")
-        .agg(*[F.min(c).alias(c) for c in cols])
-    )
-
-
 def funnel_outcomes(
     stage_mins: DataFrame, attribution_window_s: int | None = None
 ) -> DataFrame:

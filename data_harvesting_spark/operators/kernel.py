@@ -1,12 +1,9 @@
-"""The shared per-session curate kernel — ONE implementation used by BOTH
-runners (mirrors the reference's E1/E2 split, SURVEY §3):
-
-- batch:     groupBy(conv_id, session_id).applyInPandas(kernel)
-- streaming: applyInPandasWithState buffers a session, emits kernel(buffer)
-             when the watermark closes it
-
-Byte-for-byte batch/stream parity is therefore by construction (north_star
-requirement), not by coincidence of two implementations.
+"""The per-conversation curate kernel — the batch reference
+implementation (``operators/curate_sessions.py``:
+groupBy(conv_id).applyInPandas(kernel)) that the declarative pipeline
+(``operators/curate.py``) and the streaming curate job
+(``streaming/pipeline.py``) are tested against: two independent
+implementations of one semantics.
 
 The kernel itself is pandas-vectorized: dedup via hash `duplicated()`,
 as-of call↔response pairing via `merge_asof(by=tool)`, first-response-wins
@@ -21,15 +18,6 @@ import numpy as np
 import pandas as pd
 
 from data_harvesting_spark.config import HarvestConfig
-
-# kernel input columns (text_hash precomputed JVM-side with xxhash64)
-KERNEL_INPUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "text_hash"]
-
-# kernel output columns
-KERNEL_OUTPUT_COLS = [
-    "conv_id", "window_start", "example_idx", "call_turn_idx",
-    "response_turn_idx", "tool", "call_text", "response_text", "text_hash",
-]
 
 _EMPTY = pd.DataFrame(
     {
@@ -46,28 +34,10 @@ _EMPTY = pd.DataFrame(
 )
 
 
-def curate_session(
-    pdf: pd.DataFrame, cfg: HarvestConfig, carry: dict | None = None
-) -> pd.DataFrame:
-    """Curate ONE session's turns → curated call/response pairs.
-
-    Thin wrapper over the vectorized multi-session kernel (single session
-    id) — used by the streaming state handler, which emits one closed
-    session at a time, threading ``carry`` (the conversation-scope
-    emitted/suppression cursor kept in stream state) between closes.
-    """
-    if len(pdf) == 0:
-        return _EMPTY.copy()
-    return curate_sessions_frame(
-        pdf, np.zeros(len(pdf), dtype=np.int64), cfg, carry
-    )
-
-
 def curate_sessions_frame(
     pdf: pd.DataFrame,
     session_ids: np.ndarray,
     cfg: HarvestConfig,
-    carry: dict | None = None,
 ) -> pd.DataFrame:
     """Vectorized curate over ALL of one conversation's sessions at once.
 
@@ -75,7 +45,8 @@ def curate_sessions_frame(
     the whole conversation instead of a Python loop per session — the
     per-group Python overhead is per-conversation, not per-session.
 
-    Expects columns KERNEL_INPUT_COLS; any extra columns are ignored.
+    Expects columns conv_id, turn_idx, role, text, tool, ts and text_hash
+    (precomputed JVM-side with xxhash64); any extra columns are ignored.
     Semantics (identical to operators/curate.py's declarative pipeline;
     dedup/correlation are always per session):
       1. stable order (session, turn_idx)
@@ -88,12 +59,6 @@ def curate_sessions_frame(
          cumulative budget and numbering across the conversation's sessions
          in time order, `/root/reference/services/harvest_service.py:175`)
          or "session" (each session independent).
-
-    ``carry`` (conversation scope only): ``{"emitted": int,
-    "suppress_until": int}`` — the cross-call cursor for streaming, where
-    sessions of one conversation close incrementally. Mutated in place with
-    the post-call values. ``None`` (batch: whole conversation in one call)
-    means start from zero.
     """
     if len(pdf) == 0:
         return _EMPTY.copy()
@@ -153,8 +118,6 @@ def curate_sessions_frame(
     )
 
     conv_scope = cfg.cap_scope == "conversation"
-    emitted0 = carry["emitted"] if (conv_scope and carry) else 0
-    sup0 = carry["suppress_until"] if (conv_scope and carry) else -1
 
     # 6a. suppression sweep (response-turn spacing), bounded by cap —
     # inherently sequential (reference services/harvest_service.py:207-231);
@@ -163,7 +126,7 @@ def curate_sessions_frame(
     # sessions, so the cursor carries); session scope: reset per session.
     if cfg.suppress_turns_after_emit > 0:
         keep_rows = []
-        cur_sid, suppress_until, emitted = None, sup0, emitted0
+        cur_sid, suppress_until, emitted = None, -1, 0
         for idx, sid, resp_idx in zip(
             merged.index,
             merged["_sid"].to_numpy(),
@@ -179,41 +142,26 @@ def curate_sessions_frame(
             emitted += 1
             suppress_until = resp_idx + cfg.suppress_turns_after_emit
         merged = merged.loc[keep_rows]
-        swept_sup = int(suppress_until)
     elif cfg.max_pairs_per_conv:
         if conv_scope:
-            merged = merged.head(max(0, cfg.max_pairs_per_conv - emitted0))
+            merged = merged.head(cfg.max_pairs_per_conv)
         else:
             merged = merged.groupby("_sid").head(cfg.max_pairs_per_conv)
 
     if cfg.min_pairs_per_conv > 1:
         # conversation scope: gate on the whole conversation's pair count
-        # (batch-only when streaming — see validate_config)
         if conv_scope:
-            if emitted0 + len(merged) < cfg.min_pairs_per_conv:
-                if carry is not None:
-                    # tell the streaming caller pairs existed but were
-                    # gated — it retains the buffer so a later session can
-                    # pool with them (batch parity under the retention)
-                    carry["gate_blocked"] = int(len(merged))
+            if len(merged) < cfg.min_pairs_per_conv:
                 merged = merged.iloc[0:0]
         else:
             sizes = merged.groupby("_sid")["_sid"].transform("size")
             merged = merged[sizes >= cfg.min_pairs_per_conv]
 
     n = len(merged)
-    if conv_scope and carry is not None:
-        carry["emitted"] = emitted0 + n
-        if cfg.suppress_turns_after_emit > 0:
-            # the cursor must reflect rows actually EMITTED: if the min
-            # gate just emptied the emission set, the sweep's spacing never
-            # happened from the caller's point of view, so the carried
-            # cursor reverts to its pre-call value (r2 ADVICE latent trap)
-            carry["suppress_until"] = swept_sup if n > 0 else sup0
     if n == 0:
         return _EMPTY.copy()
     example_idx = (
-        (emitted0 + np.arange(n, dtype=np.int32)).astype("int32")
+        np.arange(n, dtype=np.int32)
         if conv_scope
         else merged.groupby("_sid").cumcount().to_numpy("int32")
     )

@@ -110,17 +110,6 @@ def exact_count(transcripts: DataFrame, role: str, n: int) -> DataFrame:
     )
 
 
-def min_qualifying(transcripts: DataFrame, n: int) -> DataFrame:
-    """P8 min-detections gate: >= n tool-involved turns per conversation
-    (reference: `condition.py:79-80`)."""
-    return (
-        transcripts.groupBy("conv_id")
-        .agg(F.count(F.when(F.col("tool").isNotNull(), 1)).alias("_cnt"))
-        .where(F.col("_cnt") >= n)
-        .select("conv_id")
-    )
-
-
 def filter_conversations(transcripts: DataFrame, qualifying: DataFrame) -> DataFrame:
     """Keep only turns of qualifying conversations. Left-semi join on the
     group key — Catalyst broadcasts the key set when small; at scale both

@@ -163,32 +163,6 @@ def _projection(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((dim, n_planes))
 
 
-def lsh_signatures(
-    embeddings: DataFrame,
-    dim: int = 64,
-    n_planes: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane LSH signature per vector, as one vectorized
-    pandas UDF (Arrow batches → numpy matmul → packed int bucket)."""
-    proj = _projection(dim, n_planes, seed)
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-
-    @pandas_udf("long")
-    def sig(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy())  # (batch, dim)
-        bits = (m @ proj) > 0  # (batch, n_planes)
-        return pd.Series(bits @ weights)
-
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        sig(F.col(vec_col)).alias("bucket"),
-    )
-
-
 def cosine_topk_lsh(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -265,36 +239,6 @@ def lsh_signatures_multi(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("vec"),
         F.posexplode(sigs(F.col(vec_col))).alias("table_idx", "bucket"),
-    )
-
-
-def embedding_near_dup(
-    embeddings: DataFrame, threshold: float = 0.95, n_planes: int = 8,
-    dim: int = 64, seed: int = 42,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (a < b) above threshold,
-    LSH-bucketed: near-identical vectors collide in all-planes buckets."""
-    sigs = lsh_signatures(embeddings, dim, n_planes, seed)
-    a, b = sigs.alias("a"), sigs.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
-    )
-    cos = _dot(
-        F.col("a.vec").cast("array<double>"), F.col("b.vec").cast("array<double>")
-    ) / (
-        _norm(F.col("a.vec").cast("array<double>"))
-        * _norm(F.col("b.vec").cast("array<double>"))
-    )
-    return (
-        cand.withColumn("cosine", cos)
-        .where(F.col("cosine") >= threshold)
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.round("cosine", 6).alias("cosine"),
-        )
     )
 
 

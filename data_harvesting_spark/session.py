@@ -1,11 +1,12 @@
 """SparkSession factory.
 
-Scale posture (tuned for local[32] testing, designed for 1000-executor
-clusters): AQE on (runtime re-plan, skew-join splitting, partition
-coalescing), Arrow on (pandas-UDF hot path), UTC session timezone (pinned so
-DuckDB-oracle timestamp comparisons are stable), shuffle partitions sized to
-local cores via env — on a real cluster this would be left to AQE +
-`spark.sql.shuffle.partitions` sized to executor cores.
+Scale posture (designed for 1000-executor clusters): AQE on (runtime
+re-plan, skew-join splitting, partition coalescing), Arrow on (pandas-UDF
+hot path), UTC session timezone (pinned so DuckDB-oracle timestamp
+comparisons are stable), local cores and shuffle partitions from
+``SPARK_GRAFT_CPUS``, else the host's ``os.cpu_count()`` — on a real cluster
+this would be left to AQE + `spark.sql.shuffle.partitions` sized to
+executor cores.
 """
 
 from __future__ import annotations
@@ -21,11 +22,11 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    host_cpus = os.cpu_count() or 1
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        n = cpus if cpus.isdigit() else str(os.cpu_count() or 8)
-        shuffle_partitions = int(n)
+        shuffle_partitions = int(cpus) if cpus.isdigit() else host_cpus
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -1,9 +1,11 @@
 """Streaming job builders — the ``queue_harvesting.py`` analog (E1).
 
-readStream → watermark → stateful correlate → foreachBatch idempotent sink,
-plus the windowed harvest-rate aggregate stream. File-based micro-batch
-source locally; ``format('iceberg')``/Kafka are config swaps on a real
-cluster (same plan).
+The flagship curate job is readStream → watermark → JVM session window →
+foreachBatch curate of the closed sessions → idempotent sink; the other
+jobs (rates, dedup, exports, sketches, CEP, SCD2, joins) share its source
+readers and ledger pattern, and every job starts through ``_start``.
+File-based micro-batch source locally; ``format('iceberg')``/Kafka are
+config swaps on a real cluster (same plan).
 """
 
 from __future__ import annotations
@@ -17,7 +19,6 @@ from data_harvesting_spark.config import HarvestConfig
 from data_harvesting_spark.functions.text import text_hash
 from data_harvesting_spark.schema import TRANSCRIPT_SCHEMA
 from data_harvesting_spark.streaming.sink import sink_for
-from data_harvesting_spark.streaming.state import correlate_stream
 
 
 def read_transcript_stream(
@@ -37,52 +38,54 @@ def read_transcript_stream(
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def curated_stream(
-    stream: DataFrame, cfg: HarvestConfig, late_counter=None
-) -> DataFrame:
-    """transcript stream → curated pairs stream (stateful kernel path)."""
-    with_hash = stream.withColumn("text_hash", text_hash("text"))
-    return correlate_stream(with_hash, cfg, late_counter)
-
-
-def start_curate_job(
-    spark: SparkSession,
-    source_dir: str,
-    cfg: HarvestConfig,
-    available_now: bool = True,
+def _start(
+    df: DataFrame,
+    checkpoint_dir: str,
+    batch_writer,
+    available_now: bool,
+    late_counter=None,
 ):
-    """Run the end-to-end curate stream into the configured idempotent sink.
+    """Start ``df`` as an append-mode stream into ``batch_writer`` — the one
+    writeStream of the package. Checkpointing ties source offsets to sink
+    writes: a batch is replayed iff its write may not have committed, and
+    every sink write is idempotent → exactly-once (W7, north_rule).
 
-    Checkpointing ties source offsets to sink writes: a batch is replayed
-    iff its write may not have committed, and the sink write is idempotent
-    → exactly-once (W7, north_rule). Returns the StreamingQuery.
+    ``available_now`` runs the backlog and stops; otherwise the default
+    processing-time trigger runs until stopped (``drain()``). A job whose
+    Python state handler counts late drops in an accumulator passes it as
+    ``late_counter``; it rides the returned query as ``q.late_counter``.
     """
-    from data_harvesting_spark.config import validate_config
-
-    validate_config(cfg, streaming_runner="kernel")  # J4 analog
-    assert cfg.sink_path and cfg.checkpoint_dir, "configure sink + checkpoint"
-    os.makedirs(cfg.sink_path, exist_ok=True)
-    sink_fn = sink_for(cfg.sink_format)
-    stream = read_transcript_stream(spark, source_dir)
-    # W6 late-drop accounting for the kernel path (the JVM paths report
-    # numRowsDroppedByWatermark natively; applyInPandasWithState does not
-    # pre-filter, so the handler drops + counts via this accumulator)
-    late_counter = spark.sparkContext.accumulator(0)
-    curated = curated_stream(stream, cfg, late_counter)
-
-    def batch_writer(df: DataFrame, epoch_id: int) -> None:
-        sink_fn(df, epoch_id, cfg.sink_path)
-
     writer = (
-        curated.writeStream.outputMode("append")
-        .option("checkpointLocation", cfg.checkpoint_dir)
+        df.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(batch_writer)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
     q = writer.start()
-    q.late_counter = late_counter
+    if late_counter is not None:
+        q.late_counter = late_counter
     return q
+
+
+def _epoch_writer(sink_path: str):
+    """foreachBatch writer into the idempotent epoch sink at ``sink_path``;
+    the sink is looked up when each batch runs."""
+
+    def batch_writer(df: DataFrame, epoch_id: int) -> None:
+        sink_for("epoch")(df, epoch_id, sink_path)
+
+    return batch_writer
+
+
+def _prepare_sink(cfg: HarvestConfig) -> None:
+    """Validate ``cfg`` (J4 analog) and create its sink directory."""
+    from data_harvesting_spark.config import ConfigError, validate_config
+
+    validate_config(cfg)
+    if not (cfg.sink_path and cfg.checkpoint_dir):
+        raise ConfigError("configure sink_path and checkpoint_dir")
+    os.makedirs(cfg.sink_path, exist_ok=True)
 
 
 def start_rates_job(
@@ -129,16 +132,9 @@ def start_rates_job(
             "conv_distinct",
         )
     )
-    writer = (
-        rates.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, epoch: sink_for("epoch")(df, epoch, sink_path)
-        )
+    return _start(
+        rates, checkpoint_dir, _epoch_writer(sink_path), available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_union_rates_job(
@@ -191,19 +187,9 @@ def start_union_rates_job(
         )
     )
 
-    def batch_writer(df: DataFrame, epoch_id: int) -> None:
-        from data_harvesting_spark.streaming.sink import write_epoch
-
-        write_epoch(df, epoch_id, sink_path)
-
-    writer = (
-        rates.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
+    return _start(
+        rates, checkpoint_dir, _epoch_writer(sink_path), available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_windowed_topk_stream_job(
@@ -265,14 +251,7 @@ def start_windowed_topk_stream_job(
         )
         write_epoch(ranked, epoch_id, sink_path)
 
-    writer = (
-        counts.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(counts, checkpoint_dir, batch_writer, available_now)
 
 
 def start_dedup_stream_job(
@@ -315,20 +294,9 @@ def start_dedup_stream_job(
         .dropDuplicatesWithinWatermark(["conv_id", "norm_hash"])
         .drop("norm_hash")
     )
-    writer = (
-        deduped.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(lambda df, epoch: sink_for("epoch")(df, epoch, sink_path))
+    return _start(
+        deduped, checkpoint_dir, _epoch_writer(sink_path), available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _read_hash_ledger(spark: SparkSession, ledger_path: str, epoch_id: int):
-    """Latest seen-hash snapshot strictly before ``epoch_id`` (same
-    per-epoch frozen-pre-state replay design as ``_read_cap_ledger``)."""
-    return _read_cap_ledger(spark, ledger_path, epoch_id)
 
 
 def start_neardup_stream_job(
@@ -402,7 +370,7 @@ def start_neardup_stream_job(
                     .where(F.col("doc_id") > F.col("_min"))
                     .select(F.col("doc_id").alias("_k"))
                 )
-                prior = _read_hash_ledger(sp, ledger_path, epoch_id)
+                prior = _read_cap_ledger(sp, ledger_path, epoch_id)
                 if prior is not None:
                     seen = bands.join(
                         prior, ["band", "band_sig"], "left_semi"
@@ -444,14 +412,7 @@ def start_neardup_stream_job(
         finally:
             keyed.unpersist()
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, batch_writer, available_now)
 
 
 def start_boilerplate_stream_job(
@@ -512,7 +473,7 @@ def start_boilerplate_stream_job(
             pairs_b = keyed.groupBy("tkey", "conv_id").agg(
                 F.unix_millis(F.max("ts")).cast("long").alias("_new_ms")
             )
-            prior = _read_hash_ledger(sp, ledger_path, epoch_id)
+            prior = _read_cap_ledger(sp, ledger_path, epoch_id)
             if prior is not None:
                 boiler_prior = prior.where(F.col("boiler")).select(
                     "tkey", "last_ms"
@@ -586,14 +547,7 @@ def start_boilerplate_stream_job(
         finally:
             keyed.unpersist()
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, batch_writer, available_now)
 
 
 def start_training_export_stream_job(
@@ -604,12 +558,12 @@ def start_training_export_stream_job(
     min_words: int = 3,
 ):
     """The batch ``training_export`` catalog query as ONE continuous
-    stream: stateful curate → CROSS-CONVERSATION, cross-micro-batch exact
-    response dedup → min-words quality gate → PII redaction → idempotent
-    epoch sink.
+    stream: session-window curate → CROSS-CONVERSATION, cross-micro-batch
+    exact response dedup → min-words quality gate → PII redaction →
+    idempotent epoch sink.
 
     Why the dedup is in ``foreachBatch`` and not a chained
-    ``dropDuplicatesWithinWatermark``: the session kernel only emits a
+    ``dropDuplicatesWithinWatermark``: the session window only emits a
     session after the watermark has passed its end + gap, so every
     emitted row is already "late" w.r.t. the global watermark — Spark's
     multi-stateful-operator correctness check rejects the chain (verified
@@ -635,7 +589,6 @@ def start_training_export_stream_job(
     """
     from pyspark.sql import Window
 
-    from data_harvesting_spark.config import validate_config
     from data_harvesting_spark.functions.text import (
         quality_features,
         redact_pii,
@@ -644,20 +597,16 @@ def start_training_export_stream_job(
         parse_duration_seconds,
     )
 
-    validate_config(cfg, streaming_runner="kernel")
-    assert cfg.sink_path and cfg.checkpoint_dir, "configure sink + checkpoint"
-    os.makedirs(cfg.sink_path, exist_ok=True)
+    _prepare_sink(cfg)
     ledger_path = cfg.sink_path.rstrip("/") + ".seenhashes"
     retention_ms = int(parse_duration_seconds(cfg.cap_state_retention) * 1000)
-    late_counter = spark.sparkContext.accumulator(0)
-    stream = read_transcript_stream(spark, source_dir)
-    curated = curated_stream(stream, cfg, late_counter)
+    sessions = closed_sessions(read_transcript_stream(spark, source_dir), cfg)
 
     def batch_writer(df: DataFrame, epoch_id: int) -> None:
         from data_harvesting_spark.streaming.sink import write_epoch
 
         sp = df.sparkSession
-        batch = df.persist()
+        batch = curate_closed_sessions(df, cfg, epoch_id)
         try:
             hi = batch.agg(
                 (F.unix_micros(F.max("window_start")) / 1000)
@@ -674,7 +623,7 @@ def start_training_export_stream_job(
                 .drop("_rn")
             ).persist()
             try:
-                prior = _read_hash_ledger(sp, ledger_path, epoch_id)
+                prior = _read_cap_ledger(sp, ledger_path, epoch_id)
                 if prior is not None:
                     fresh = firsts.join(
                         prior.select("text_hash"), "text_hash", "left_anti"
@@ -732,16 +681,7 @@ def start_training_export_stream_job(
         finally:
             batch.unpersist()
 
-    writer = (
-        curated.writeStream.outputMode("append")
-        .option("checkpointLocation", cfg.checkpoint_dir)
-        .foreachBatch(batch_writer)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    q.late_counter = late_counter
-    return q
+    return _start(sessions, cfg.checkpoint_dir, batch_writer, available_now)
 
 
 # ---------------------------------------------------------------- DPO export
@@ -861,8 +801,9 @@ def start_dpo_export_stream_job(
     cfg: HarvestConfig,
     available_now: bool = True,
 ):
-    """The batch ``dpo_pairs`` export as ONE continuous stream: stateful
-    curate → per-tool best/worst preference ledger → idempotent epoch sink.
+    """The batch ``dpo_pairs`` export as ONE continuous stream:
+    session-window curate → per-tool best/worst preference ledger →
+    idempotent epoch sink.
 
     Epoch N reads frozen ledger snapshot N-1, folds this batch's per-tool
     aggregate in (``merge_dpo_state`` — exact, associativity of min/max
@@ -875,21 +816,16 @@ def start_dpo_export_stream_job(
     tests/test_streaming.py::test_dpo_export_stream_equals_batch and the
     kill-resume variant.
     """
-    from data_harvesting_spark.config import validate_config
-
-    validate_config(cfg, streaming_runner="kernel")
-    assert cfg.sink_path and cfg.checkpoint_dir, "configure sink + checkpoint"
-    os.makedirs(cfg.sink_path, exist_ok=True)
+    _prepare_sink(cfg)
     ledger_path = cfg.sink_path.rstrip("/") + ".dpostate"
-    late_counter = spark.sparkContext.accumulator(0)
-    stream = read_transcript_stream(spark, source_dir)
-    curated = curated_stream(stream, cfg, late_counter)
+    sessions = closed_sessions(read_transcript_stream(spark, source_dir), cfg)
 
     def batch_writer(df: DataFrame, epoch_id: int) -> None:
         from data_harvesting_spark.streaming.sink import write_epoch
 
         sp = df.sparkSession
-        batch_state = dpo_state(dpo_candidates(df))
+        curated = curate_closed_sessions(df, cfg, epoch_id)
+        batch_state = dpo_state(dpo_candidates(curated))
         prior = _read_cap_ledger(sp, ledger_path, epoch_id)
         merged = (
             merge_dpo_state(prior, batch_state)
@@ -897,7 +833,7 @@ def start_dpo_export_stream_job(
             else batch_state
         )
         # both the changed-pair emission and the snapshot consume merged —
-        # persist so the upstream stateful curation runs once per epoch
+        # persist so the ledger merge runs once per epoch
         merged = merged.persist()
         try:
             valid = dpo_pairs_from_state(merged)
@@ -930,17 +866,9 @@ def start_dpo_export_stream_job(
             _prune_cap_ledger(ledger_path, epoch_id)
         finally:
             merged.unpersist()
+            curated.unpersist()
 
-    writer = (
-        curated.writeStream.outputMode("append")
-        .option("checkpointLocation", cfg.checkpoint_dir)
-        .foreachBatch(batch_writer)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    q.late_counter = late_counter
-    return q
+    return _start(sessions, cfg.checkpoint_dir, batch_writer, available_now)
 
 
 def read_dpo_export(spark: SparkSession, sink_path: str) -> DataFrame:
@@ -982,31 +910,18 @@ def start_sft_export_stream_job(
     deterministic given checkpointed state, so replayed epochs rewrite
     identical rows (W7; pinned by the kill-resume test).
     """
-    from data_harvesting_spark.config import validate_config
     from data_harvesting_spark.streaming.sft import sft_stream
-    from data_harvesting_spark.streaming.sink import write_epoch
 
-    validate_config(cfg, streaming_runner="kernel")
-    assert cfg.sink_path and cfg.checkpoint_dir, "configure sink + checkpoint"
-    os.makedirs(cfg.sink_path, exist_ok=True)
+    _prepare_sink(cfg)
     late_counter = spark.sparkContext.accumulator(0)
     stream = read_transcript_stream(spark, source_dir)
     pairs = sft_stream(stream, cfg, context_turns, late_counter,
                        context_budget)
 
-    def batch_writer(df: DataFrame, epoch_id: int) -> None:
-        write_epoch(df, epoch_id, cfg.sink_path)
-
-    writer = (
-        pairs.writeStream.outputMode("append")
-        .option("checkpointLocation", cfg.checkpoint_dir)
-        .foreachBatch(batch_writer)
+    return _start(
+        pairs, cfg.checkpoint_dir, _epoch_writer(cfg.sink_path), available_now,
+        late_counter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    q.late_counter = late_counter
-    return q
 
 
 def start_pattern_stream_job(
@@ -1023,30 +938,17 @@ def start_pattern_stream_job(
     session closes so cross-session matches emit EXACTLY as the batch
     lead-windows would. Output flows through the idempotent epoch sink
     (W7; pinned by the kill-resume test)."""
-    from data_harvesting_spark.config import validate_config
     from data_harvesting_spark.streaming.patterns import pattern_stream
-    from data_harvesting_spark.streaming.sink import write_epoch
 
-    validate_config(cfg, streaming_runner="kernel")
-    assert cfg.sink_path and cfg.checkpoint_dir, "configure sink + checkpoint"
-    os.makedirs(cfg.sink_path, exist_ok=True)
+    _prepare_sink(cfg)
     late_counter = spark.sparkContext.accumulator(0)
     stream = read_transcript_stream(spark, source_dir)
     matches = pattern_stream(stream, cfg, late_counter)
 
-    def batch_writer(df: DataFrame, epoch_id: int) -> None:
-        write_epoch(df, epoch_id, cfg.sink_path)
-
-    writer = (
-        matches.writeStream.outputMode("append")
-        .option("checkpointLocation", cfg.checkpoint_dir)
-        .foreachBatch(batch_writer)
+    return _start(
+        matches, cfg.checkpoint_dir, _epoch_writer(cfg.sink_path),
+        available_now, late_counter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    q.late_counter = late_counter
-    return q
 
 
 def start_timeout_stream_job(
@@ -1065,30 +967,17 @@ def start_timeout_stream_job(
     folded onto Spark's one event-time timeout per key (min over pending
     deadlines). Output flows through the idempotent epoch sink (W7;
     pinned by the kill-resume test)."""
-    from data_harvesting_spark.config import validate_config
-    from data_harvesting_spark.streaming.sink import write_epoch
     from data_harvesting_spark.streaming.timeouts import timeout_stream
 
-    validate_config(cfg, streaming_runner="kernel")
-    assert cfg.sink_path and cfg.checkpoint_dir, "configure sink + checkpoint"
-    os.makedirs(cfg.sink_path, exist_ok=True)
+    _prepare_sink(cfg)
     late_counter = spark.sparkContext.accumulator(0)
     stream = read_transcript_stream(spark, source_dir)
     alerts = timeout_stream(stream, cfg, late_counter)
 
-    def batch_writer(df: DataFrame, epoch_id: int) -> None:
-        write_epoch(df, epoch_id, cfg.sink_path)
-
-    writer = (
-        alerts.writeStream.outputMode("append")
-        .option("checkpointLocation", cfg.checkpoint_dir)
-        .foreachBatch(batch_writer)
+    return _start(
+        alerts, cfg.checkpoint_dir, _epoch_writer(cfg.sink_path),
+        available_now, late_counter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    q.late_counter = late_counter
-    return q
 
 
 def latency_pairs(transcripts: DataFrame, watermark_delay: str,
@@ -1163,24 +1052,21 @@ def start_latency_quantiles_job(
     stream = read_transcript_stream(spark, source_dir)
     lat = latency_pairs(stream, cfg.watermark_delay)
     rates = latency_quantiles_windowed(lat, window)
-    writer = (
-        rates.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(lambda df, epoch: sink_for("epoch")(df, epoch, sink_path))
+    return _start(
+        rates, checkpoint_dir, _epoch_writer(sink_path), available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def drain(q, idle_seconds: float = 3.0, timeout: float = 180.0) -> None:
     """Run a ProcessingTime-triggered query until it has consumed all
     available input AND gone idle (no batch progress) for ``idle_seconds``.
 
-    Needed because event-time timers fire in the no-data micro-batch that
-    runs after the watermark advances — which ``availableNow`` never
-    executes (it stops at the last data batch). A production query runs
-    forever, so timers fire naturally; drain() is the finite-input analog.
+    A processing-time query never stops by itself: event-time timers fire
+    and sessions close in the no-data micro-batch that runs after the
+    watermark advances, and a production query runs forever, so they
+    close naturally; drain() is the finite-input analog. (``availableNow``
+    also runs one no-data batch after the last data batch on Spark 4.1.2
+    — a 3-file replay runs 4 micro-batches — and then stops.)
     """
     import time
 
@@ -1214,10 +1100,12 @@ def run_sessionized_stream_to_completion(
     source_dir: str,
     cfg: HarvestConfig,
 ) -> DataFrame:
-    """Convenience: run the curate job until input is exhausted and all
-    event-time timers have fired; return the curated sink as a batch
-    DataFrame."""
-    q = start_curate_job(spark, source_dir, cfg, available_now=False)
+    """Convenience: run the curate job until input is exhausted and every
+    session the final watermark closes has been curated; return the
+    curated sink as a batch DataFrame."""
+    q = start_curate_job_session_window(
+        spark, source_dir, cfg, available_now=False
+    )
     drain(q)
     from data_harvesting_spark.streaming.sink import (
         read_epoch_sink,
@@ -1230,9 +1118,10 @@ def run_sessionized_stream_to_completion(
 
 
 def _read_cap_ledger(spark: SparkSession, ledger_path: str, epoch_id: int):
-    """Latest cap-ledger snapshot strictly before ``epoch_id`` (None if
-    none). Snapshots are per-epoch dirs so a replayed epoch re-reads the
-    exact pre-state it saw the first time — idempotent under W7 replay."""
+    """Latest ledger snapshot strictly before ``epoch_id`` (None if none),
+    for every per-epoch ledger in this module. Snapshots are per-epoch dirs
+    so a replayed epoch re-reads the exact pre-state it saw the first time
+    — idempotent under W7 replay."""
     import re
 
     if not os.path.isdir(ledger_path):
@@ -1250,8 +1139,8 @@ def _read_cap_ledger(spark: SparkSession, ledger_path: str, epoch_id: int):
 def _cap_with_ledger(
     turns: DataFrame, cfg, epoch_id: int, ledger_path: str
 ) -> DataFrame:
-    """Conversation-scope P9 cap + W3 numbering for the session-window
-    runner, exact across micro-batches.
+    """Conversation-scope P9 cap + W3 numbering for the curate runner,
+    exact across micro-batches.
 
     Sessions of one conversation close over multiple batches; the
     cumulative pairs-emitted count and (when suppressing) the P10
@@ -1272,14 +1161,12 @@ def _cap_with_ledger(
     Bounded width (r2 VERDICT): each snapshot row carries the
     conversation's last event time, and a conversation whose
     ``last + session_gap + cap_state_retention`` has fallen behind the
-    batch's max event time is EVICTED from the snapshot — mirroring the
-    kernel runner's tombstone timeout (streaming/state.py). Per-epoch
-    ledger cost is therefore O(conversations active within the retention),
-    not O(all conversations ever seen). The batch max event time is a
-    conservative stand-in for the watermark (it is always >= every closed
-    session's end, and the true watermark is ahead of it by at most the
-    watermark delay), so eviction never fires earlier than the kernel
-    runner's timeout would.
+    max event time of this epoch's closed sessions is EVICTED from the
+    snapshot. Per-epoch ledger cost is therefore O(conversations active
+    within the retention), not O(all conversations ever seen). That max
+    event time is a conservative stand-in for the watermark (a session
+    closes only once the watermark has passed its end + gap), so eviction
+    never fires before the watermark has passed the horizon.
     """
     from pyspark.sql import Window
 
@@ -1313,9 +1200,8 @@ def _cap_with_ledger(
     if prior is not None and "suppress_until" not in prior.columns:
         prior = prior.withColumn("suppress_until", F.lit(-1).cast("long"))
     # conversation-scope min gate (P8, min_pairs_per_conv > 1): POOLED
-    # deferral via a pending buffer, the ledger analog of the kernel
-    # runner's deferred emission (streaming/state.py). Nothing is emitted
-    # for a conversation until its cumulative pair count (pending from
+    # deferral via a pending buffer. Nothing is emitted for a
+    # conversation until its cumulative pair count (pending from
     # prior epochs + fresh this epoch) reaches the gate; once a
     # conversation has emitted anything (ledger emitted > 0) the gate is
     # definitionally passed and later sessions emit directly. Withheld
@@ -1323,8 +1209,7 @@ def _cap_with_ledger(
     # frozen-pre-state replay discipline as the ledger itself, and are
     # retention-evicted with their conversation (semi-join against the
     # post-eviction ledger snapshot below) — batch parity holds whenever
-    # inter-session gaps stay under cap_state_retention, exactly the
-    # kernel runner's documented contract.
+    # inter-session gaps stay under cap_state_retention (config.py).
     min_gate = cfg.min_pairs_per_conv
     pending_path = ledger_path.rstrip("/") + ".pending"
     combined = withheld = None
@@ -1438,10 +1323,9 @@ def _cap_with_ledger(
             F.col("_act_ms").cast("long").alias("last_ms"),
         )
     if hi is not None:
-        # retention eviction (kernel-runner tombstone analog): forget
-        # conversations whose budget window has fully expired; a NULL
-        # last_ms (legacy row with no observed timestamp yet) is retained,
-        # never evicted on a guess
+        # retention eviction: forget conversations whose budget window has
+        # fully expired; a NULL last_ms (legacy row with no observed
+        # timestamp yet) is retained, never evicted on a guess
         snapshot = snapshot.where(
             F.col("last_ms").isNull()
             | (F.col("last_ms") + horizon_ms >= F.lit(hi))
@@ -1484,36 +1368,12 @@ def _prune_cap_ledger(ledger_path: str, epoch_id: int, keep: int = 3) -> None:
             _sh.rmtree(os.path.join(ledger_path, d), ignore_errors=True)
 
 
-def start_curate_job_session_window(
-    spark: SparkSession,
-    source_dir: str,
-    cfg: HarvestConfig,
-    available_now: bool = True,
-):
-    """Scale-path streaming curate: JVM session windows + declarative batch
-    curate on closed sessions.
-
-    The stateful-kernel runner (start_curate_job) pays a Python handler
-    invocation per key per micro-batch just to buffer; here the buffering
-    is Spark's native ``session_window`` aggregation (UnsafeRow state,
-    whole-stage codegen, RocksDB) and append mode hands ``foreachBatch``
-    only CLOSED sessions, which the single-exchange declarative pipeline
-    (operators/curate.py::curate_keyed) curates with zero Python in the
-    per-turn path. ~20x the stateful-kernel throughput (BENCH.md); the
-    kernel runner remains the reference for custom per-key state (W5) and
-    per-session suppression sweeps.
-    """
-    from data_harvesting_spark.config import validate_config
-    from data_harvesting_spark.operators.curate import curate_keyed
-
-    validate_config(cfg, streaming_runner="session_window")
-    assert cfg.sink_path and cfg.checkpoint_dir, "configure sink + checkpoint"
-    os.makedirs(cfg.sink_path, exist_ok=True)
-    sink_fn = sink_for(cfg.sink_format)
-    ledger_path = cfg.sink_path.rstrip("/") + ".capledger"
-    stream = read_transcript_stream(spark, source_dir)
-
-    closed_sessions = (
+def closed_sessions(stream: DataFrame, cfg: HarvestConfig) -> DataFrame:
+    """Transcript stream → CLOSED sessions ``(conv_id, window_start,
+    turns)``: Spark's native ``session_window`` aggregation buffers each
+    conversation's turns in JVM state (UnsafeRow, RocksDB) and append mode
+    emits a session once the watermark has passed its end + gap."""
+    return (
         stream.withWatermark("ts", cfg.watermark_delay)
         .groupBy(
             F.session_window("ts", cfg.session_gap).alias("sw"),
@@ -1529,29 +1389,58 @@ def start_curate_job_session_window(
         )
     )
 
-    def batch_writer(df: DataFrame, epoch_id: int) -> None:
-        turns = df.select(
-            "conv_id", "window_start", F.explode("turns").alias("t")
-        ).select("conv_id", "window_start", "t.*")
-        if cfg.cap_scope == "conversation":
-            # cumulative per-conversation budget + numbering across batches
-            curated = _cap_with_ledger(turns, cfg, epoch_id, ledger_path)
-            try:
-                sink_fn(curated, epoch_id, cfg.sink_path)
-            finally:
-                curated.unpersist()
-        else:
-            curated = curate_keyed(turns, cfg)
-            sink_fn(curated, epoch_id, cfg.sink_path)
 
-    writer = (
-        closed_sessions.writeStream.outputMode("append")
-        .option("checkpointLocation", cfg.checkpoint_dir)
-        .foreachBatch(batch_writer)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def curate_closed_sessions(
+    sessions: DataFrame, cfg: HarvestConfig, epoch_id: int
+) -> DataFrame:
+    """One epoch of closed sessions → curated pairs (persisted; the caller
+    unpersists). Session scope curates each session on its own with the
+    single-exchange declarative pipeline (operators/curate.py::curate_keyed);
+    conversation scope carries each conversation's budget, numbering,
+    suppression cursor and below-gate pool across epochs in the cap ledger
+    next to ``cfg.sink_path`` (``_cap_with_ledger``)."""
+    from data_harvesting_spark.operators.curate import curate_keyed
+
+    turns = sessions.select(
+        "conv_id", "window_start", F.explode("turns").alias("t")
+    ).select("conv_id", "window_start", "t.*")
+    if cfg.cap_scope == "conversation":
+        ledger_path = cfg.sink_path.rstrip("/") + ".capledger"
+        return _cap_with_ledger(turns, cfg, epoch_id, ledger_path)
+    return curate_keyed(turns, cfg).persist()
+
+
+def start_curate_job_session_window(
+    spark: SparkSession,
+    source_dir: str,
+    cfg: HarvestConfig,
+    available_now: bool = True,
+):
+    """The streaming curate job: JVM session windows (``closed_sessions``)
+    + declarative batch curate of each epoch's closed sessions
+    (``curate_closed_sessions``) into the configured idempotent sink, with
+    zero Python in the per-turn path. Returns the StreamingQuery.
+
+    Late rows: the session-window operator filters late rows against the
+    watermark of the PREVIOUS micro-batch. A row that is behind the
+    watermark only from the batch right after the watermark passed it is
+    therefore kept and, if no open session is within the gap, becomes its
+    own session, closed (and curated) in that same epoch; a row still
+    behind the watermark one batch later is dropped and counted in the
+    operator's ``numRowsDroppedByWatermark`` (``lateDropped`` in
+    streaming/metrics.py).
+    """
+    _prepare_sink(cfg)
+    sessions = closed_sessions(read_transcript_stream(spark, source_dir), cfg)
+
+    def batch_writer(df: DataFrame, epoch_id: int) -> None:
+        curated = curate_closed_sessions(df, cfg, epoch_id)
+        try:
+            sink_for(cfg.sink_format)(curated, epoch_id, cfg.sink_path)
+        finally:
+            curated.unpersist()
+
+    return _start(sessions, cfg.checkpoint_dir, batch_writer, available_now)
 
 
 def start_sketch_stream_job(
@@ -1645,7 +1534,7 @@ def start_sketch_stream_job(
                 F.col("n").cast("long").alias("v"),
             )
             batch_state = cms_rows.unionByName(hll_rows).unionByName(n_rows)
-            prior = _read_hash_ledger(sp, ledger_path, epoch_id)
+            prior = _read_cap_ledger(sp, ledger_path, epoch_id)
             if prior is None:
                 prior_sketch, prior_cand = None, None
             else:
@@ -1773,14 +1662,7 @@ def start_sketch_stream_job(
         finally:
             words.unpersist()
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, batch_writer, available_now)
 
 
 def read_event_stream(
@@ -1868,14 +1750,7 @@ def start_sliding_hll_stream_job(
         )
         write_epoch(est, epoch_id, sink_path)
 
-    writer = (
-        regs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(regs, checkpoint_dir, batch_writer, available_now)
 
 
 def start_scd2_stream_job(
@@ -1899,21 +1774,10 @@ def start_scd2_stream_job(
     stream = read_event_stream(spark, source_dir)
     closed = scd2_stream(stream, watermark_delay, late_counter)
 
-    def batch_writer(df: DataFrame, epoch_id: int) -> None:
-        from data_harvesting_spark.streaming.sink import write_epoch
-
-        write_epoch(df, epoch_id, sink_path)
-
-    writer = (
-        closed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
+    return _start(
+        closed, checkpoint_dir, _epoch_writer(sink_path), available_now,
+        late_counter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    q.late_counter = late_counter
-    return q
 
 
 def start_followups_stream_job(
@@ -1978,19 +1842,9 @@ def start_followups_stream_job(
         "r_event_id", "r_ts", "r_value",
     )
 
-    def batch_writer(df: DataFrame, epoch_id: int) -> None:
-        from data_harvesting_spark.streaming.sink import write_epoch
-
-        write_epoch(df, epoch_id, sink_path)
-
-    writer = (
-        joined.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
+    return _start(
+        joined, checkpoint_dir, _epoch_writer(sink_path), available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_unmatched_errors_stream_job(
@@ -2061,19 +1915,9 @@ def start_unmatched_errors_stream_job(
         "r_event_id", "r_ts", "r_value",
     )
 
-    def batch_writer(df: DataFrame, epoch_id: int) -> None:
-        from data_harvesting_spark.streaming.sink import write_epoch
-
-        write_epoch(df, epoch_id, sink_path)
-
-    writer = (
-        joined.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
+    return _start(
+        joined, checkpoint_dir, _epoch_writer(sink_path), available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_quantile_sketch_stream_job(
@@ -2127,7 +1971,7 @@ def start_quantile_sketch_stream_job(
             F.floor(F.col("value") * 1000).cast("bigint").alias("v"),
         )
         batch_hist = log2_histogram_grouped(vm, ["event_type"])
-        prior = _read_hash_ledger(sp, ledger_path, epoch_id)
+        prior = _read_cap_ledger(sp, ledger_path, epoch_id)
         merged = (
             batch_hist
             if prior is None
@@ -2156,14 +2000,7 @@ def start_quantile_sketch_stream_job(
         snapshot.unpersist()
         _prune_cap_ledger(ledger_path, epoch_id)
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, batch_writer, available_now)
 
 
 def start_funnel_stream_job(
@@ -2256,7 +2093,7 @@ def start_funnel_stream_job(
 
         sp = df.sparkSession
         batch_mins = funnel_stage_mins(df).withColumn("done", F.lit(False))
-        prior = _read_hash_ledger(sp, ledger_path, epoch_id)
+        prior = _read_cap_ledger(sp, ledger_path, epoch_id)
         if prior is None:
             prior_users, prior_counts = None, (0, 0, 0)
         elif win_s is None:
@@ -2412,14 +2249,7 @@ def start_funnel_stream_job(
         state.unpersist()
         _prune_cap_ledger(ledger_path, epoch_id)
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, batch_writer, available_now)
 
 
 def read_document_stream(
@@ -2494,7 +2324,7 @@ def start_components_stream_job(
 
         sp = df.sparkSession
         new_sigs = minhash_signatures(df, n, hash_mode).persist()
-        prior = _read_hash_ledger(sp, ledger_path, epoch_id)
+        prior = _read_cap_ledger(sp, ledger_path, epoch_id)
         if prior is None:
             prior_sigs, prior_labs = None, None
         else:
@@ -2598,14 +2428,7 @@ def start_components_stream_job(
         new_sigs.unpersist()
         _prune_cap_ledger(ledger_path, epoch_id)
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, batch_writer, available_now)
 
 
 def start_seq_pattern_stream_job(
@@ -2632,10 +2455,8 @@ def start_seq_pattern_stream_job(
         TRANSCRIPT_ROWS,
         seq_pattern_stream,
     )
-    from data_harvesting_spark.streaming.sink import write_epoch
 
-    assert cfg.sink_path and cfg.checkpoint_dir, "configure sink + checkpoint"
-    os.makedirs(cfg.sink_path, exist_ok=True)
+    _prepare_sink(cfg)
     retention_ms = int(parse_duration_seconds(cfg.cap_state_retention) * 1000)
     late_counter = spark.sparkContext.accumulator(0)
     stream = read_transcript_stream(spark, source_dir)
@@ -2649,19 +2470,10 @@ def start_seq_pattern_stream_job(
         late_counter,
     )
 
-    def batch_writer(df: DataFrame, epoch_id: int) -> None:
-        write_epoch(df, epoch_id, cfg.sink_path)
-
-    writer = (
-        matches.writeStream.outputMode("append")
-        .option("checkpointLocation", cfg.checkpoint_dir)
-        .foreachBatch(batch_writer)
+    return _start(
+        matches, cfg.checkpoint_dir, _epoch_writer(cfg.sink_path),
+        available_now, late_counter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    q.late_counter = late_counter
-    return q
 
 
 def start_burst_pattern_stream_job(
@@ -2685,7 +2497,6 @@ def start_burst_pattern_stream_job(
         EVENT_ROWS,
         seq_pattern_stream,
     )
-    from data_harvesting_spark.streaming.sink import write_epoch
 
     late_counter = spark.sparkContext.accumulator(0)
     stream = read_event_stream(spark, source_dir)
@@ -2699,19 +2510,10 @@ def start_burst_pattern_stream_job(
         late_counter,
     )
 
-    def batch_writer(df: DataFrame, epoch_id: int) -> None:
-        write_epoch(df, epoch_id, sink_path)
-
-    writer = (
-        matches.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
+    return _start(
+        matches, checkpoint_dir, _epoch_writer(sink_path), available_now,
+        late_counter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    q.late_counter = late_counter
-    return q
 
 
 def start_dq_monitor_stream_job(
@@ -2763,7 +2565,7 @@ def start_dq_monitor_stream_job(
             F.col("bucket").cast("string").alias("k"),
             F.col("m_j").cast("long").alias("v"),
         )
-        prior = _read_hash_ledger(df.sparkSession, ledger_path, epoch_id)
+        prior = _read_cap_ledger(df.sparkSession, ledger_path, epoch_id)
         merged = ctr_b.unionByName(reg_b)
         if prior is not None:
             merged = merged.unionByName(prior.select("kind", "k", "v"))
@@ -2798,14 +2600,7 @@ def start_dq_monitor_stream_job(
         snapshot.unpersist()
         _prune_cap_ledger(ledger_path, epoch_id)
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, batch_writer, available_now)
 
 
 def start_enrich_stream_job(
@@ -2856,11 +2651,4 @@ def start_enrich_stream_job(
         out = df.join(F.broadcast(dim), on=key_col, how="left")
         write_epoch(out, epoch_id, sink_path)
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_writer)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, batch_writer, available_now)

@@ -11,7 +11,6 @@ JSON line per op. Usage: python scripts/bench_dedup.py [n_docs]
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 from pathlib import Path
@@ -21,7 +20,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
 
     from pyspark.sql import functions as F
 
@@ -33,10 +31,7 @@ def main() -> None:
     )
     from data_harvesting_spark.session import get_spark
 
-    spark = get_spark(
-        "bench-dedup", shuffle_partitions=64,
-        extra_conf={"spark.local.dir": "/dev/shm/spark-local"},
-    )
+    spark = get_spark("bench-dedup", shuffle_partitions=64)
     spark.sparkContext.setLogLevel("ERROR")
 
     words = F.array(*[F.lit(w) for w in [

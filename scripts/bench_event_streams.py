@@ -4,7 +4,8 @@ event-time-ordered parquet files -> job run to completion with
 availableNow -> events/sec.
 
 Protocol matches the round-4 funnel bench (BENCH.md): 4M rows, 200k
-users, 5 event types, 8 slices, local[32].
+users, 5 event types, 8 slices; cores default to the host's
+``os.cpu_count()`` (the round-4 figures were local[32]).
 
 Usage: python scripts/bench_event_streams.py [n_rows] [cores] [jobs...]
 Jobs: quantile scd2 followups outerjoin slidinghll funnel dq enrich
@@ -79,17 +80,15 @@ def generate_events(spark, n_rows: int, out: str, n_slices: int) -> None:
 
 def main() -> None:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
-    cores = int(sys.argv[2]) if len(sys.argv) > 2 else 32
+    cores = int(sys.argv[2]) if len(sys.argv) > 2 else os.cpu_count() or 1
     jobs = sys.argv[3:] or ["quantile", "scd2", "followups", "slidinghll"]
     # "dq" joins the default set once benched; pass it explicitly
 
     from data_harvesting_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
     spark = get_spark(
         f"bench-events-{cores}", master=f"local[{cores}]",
         shuffle_partitions=cores,
-        extra_conf={"spark.local.dir": "/dev/shm/spark-local"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     src = tempfile.mkdtemp(prefix="dhs_event_src_")

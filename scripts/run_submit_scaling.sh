@@ -5,15 +5,13 @@
 # streaming curate job at local[2] and local[8], prints both JSON
 # summaries (curated_rows must match across levels — the parity check).
 #
-# Usage: scripts/run_submit_scaling.sh [source_dir] [runner]
+# Usage: scripts/run_submit_scaling.sh [source_dir]
 #   source_dir  prepared replay layout (default: tiny smoke fixture;
 #               build a throughput-sized one with
 #               `python bench.py --prepare-src 4000000 /tmp/dhs_submit_src_big`)
-#   runner      kernel | session_window (default kernel)
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 SRC="${1:-/tmp/dhs_submit_src}"
-RUNNER="${2:-kernel}"
 PKG=/tmp/dhs_pkg.zip
 
 if [ ! -d "$SRC" ]; then
@@ -34,10 +32,8 @@ for CORES in 2 8; do
     --conf spark.sql.shuffle.partitions=8 \
     --conf spark.sql.session.timeZone=UTC \
     --conf spark.ui.enabled=false \
-    --conf spark.driver.memory=24g \
-    --conf spark.local.dir=/dev/shm/spark-local \
     --conf spark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider \
     --py-files "$PKG" \
     "$REPO/scripts/submit_curate.py" \
-    --source "$SRC" --workdir "$WD" --stream --runner "$RUNNER" 2>/dev/null | tail -1
+    --source "$SRC" --workdir "$WD" --stream 2>/dev/null | tail -1
 done

@@ -26,13 +26,6 @@ def main() -> None:
     ap.add_argument("--source", required=True, help="parquet dir of transcripts")
     ap.add_argument("--workdir", required=True, help="sink + checkpoint root")
     ap.add_argument("--stream", action="store_true", help="streaming mode")
-    ap.add_argument(
-        "--runner",
-        choices=["kernel", "session_window"],
-        default="kernel",
-        help="streaming runner: stateful pandas kernel (reference for "
-        "custom per-key state) or JVM session_window (the scale path)",
-    )
     ap.add_argument("--gap", default="30 minutes")
     ap.add_argument("--watermark", default="10 minutes")
     args = ap.parse_args()
@@ -52,7 +45,6 @@ def main() -> None:
     if args.stream:
         from data_harvesting_spark.streaming.pipeline import (
             drain,
-            start_curate_job,
             start_curate_job_session_window,
         )
         from data_harvesting_spark.streaming.sink import read_epoch_sink
@@ -64,18 +56,15 @@ def main() -> None:
             sink_path=os.path.join(args.workdir, "curated"),
             checkpoint_dir=os.path.join(args.workdir, "ckpt"),
         )
-        starter = (
-            start_curate_job_session_window
-            if args.runner == "session_window"
-            else start_curate_job
+        q = start_curate_job_session_window(
+            spark, args.source, cfg, available_now=False
         )
-        q = starter(spark, args.source, cfg, available_now=False)
         # deployment runs are throughput-sized (multi-minute legs at low
         # core counts) — drain's default 180 s deadline would silently
         # truncate them; idle detection still ends the run promptly
         drain(q, timeout=3600.0)
         n = read_epoch_sink(spark, cfg.sink_path).count()
-        mode = f"stream/{args.runner}"
+        mode = "stream"
     else:
         from data_harvesting_spark.config import HarvestConfig
         from data_harvesting_spark.operators.curate import curate

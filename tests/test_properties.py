@@ -2,7 +2,7 @@
 operators whose correctness is NOT pinned by a SQL oracle because they are
 genuinely imperative: the P9/P10 sweep and gap sessionization. Each is
 checked against an obviously-correct brute-force reference over randomized
-inputs, including carried-cursor starts (the streaming ledger/state path).
+inputs, including carried-cursor starts (the streaming cap-ledger path).
 """
 
 from __future__ import annotations
@@ -63,39 +63,47 @@ def _pair_frame(n_pairs: int, spacing: int = 4) -> pd.DataFrame:
     )
 
 
-def test_carry_cursor_reflects_only_emitted_rows():
+def test_carry_cursor_reflects_only_emitted_rows(spark, tmp_path):
     """r2 ADVICE: the conversation-scope suppression cursor must be
-    committed AFTER the min gate — if the gate empties the emission set,
-    the carried ``suppress_until`` reverts to its pre-call value instead of
-    recording spacing for rows that were never emitted."""
-    import numpy as np
+    committed AFTER the min gate — if the gate withholds every pair, the
+    cap ledger's carried ``suppress_until`` keeps its prior value instead
+    of recording spacing for rows that were never emitted, and the
+    withheld pairs wait in the pending pool."""
+    from pyspark.sql import functions as F
 
     from data_harvesting_spark.config import HarvestConfig
-    from data_harvesting_spark.operators.kernel import curate_sessions_frame
+    from data_harvesting_spark.streaming.pipeline import _cap_with_ledger
 
-    pdf = _pair_frame(2)
-    sids = np.zeros(len(pdf), dtype=np.int64)
+    pdf = _pair_frame(2).drop(columns="text_hash")
+    pdf["window_start"] = pdf["ts"].min()
+    turns = spark.createDataFrame(pdf).withColumn(
+        "turn_idx", F.col("turn_idx").cast("int")
+    )
+
+    def epoch0(cfg, ledger_path):
+        curated = _cap_with_ledger(turns, cfg, 0, ledger_path)
+        out = curated.toPandas()
+        curated.unpersist()
+        snap = spark.read.parquet(ledger_path + "/_epoch=0").toPandas()
+        return out, snap[["emitted", "suppress_until"]].values.tolist()
 
     # gate fails (2 pairs < min 5): nothing emitted, cursor untouched
     cfg = HarvestConfig(
         suppress_turns_after_emit=2, min_pairs_per_conv=5, max_pairs_per_conv=10
     )
-    carry = {"emitted": 0, "suppress_until": -1}
-    out = curate_sessions_frame(pdf.copy(), sids, cfg, carry)
+    gated = str(tmp_path / "gated")
+    out, cursor = epoch0(cfg, gated)
     assert len(out) == 0
-    assert carry["emitted"] == 0
-    assert carry["suppress_until"] == -1, "cursor leaked from gated-away rows"
-    assert carry["gate_blocked"] == 2
+    assert cursor == [[0, -1]], "cursor leaked from gated-away rows"
+    assert spark.read.parquet(gated + ".pending/_epoch=0").count() == 2
 
     # gate passes (2 >= min 2): cursor records the last emitted response
     cfg2 = HarvestConfig(
         suppress_turns_after_emit=2, min_pairs_per_conv=2, max_pairs_per_conv=10
     )
-    carry2 = {"emitted": 0, "suppress_until": -1}
-    out2 = curate_sessions_frame(pdf.copy(), sids, cfg2, carry2)
+    out2, cursor2 = epoch0(cfg2, str(tmp_path / "passed"))
     assert len(out2) == 2
-    assert carry2["emitted"] == 2
-    assert carry2["suppress_until"] == int(out2["response_turn_idx"].max()) + 2
+    assert cursor2 == [[2, int(out2["response_turn_idx"].max()) + 2]]
 
 
 @settings(max_examples=200, deadline=None)

@@ -59,6 +59,16 @@ def fixture_batches(tmp_path_factory):
     return str(d)
 
 
+def _force_arrival_order(src) -> None:
+    """The file source replays files in modification-time order: make it
+    the file-name order, one second apart."""
+    import time as _time
+
+    now = _time.time()
+    for i, p in enumerate(sorted(src.glob("*.parquet"))):
+        os.utime(p, (now + i, now + i))
+
+
 def _batch_reference(spark, source_dir: str, cfg: HarvestConfig) -> pd.DataFrame:
     from data_harvesting_spark.operators.curate_sessions import curate_sessions
     from data_harvesting_spark.schema import TRANSCRIPT_SCHEMA
@@ -87,13 +97,17 @@ def test_stream_equals_batch(spark, fixture_batches, tmp_path):
 def test_kill_and_resume_exactly_once(spark, fixture_batches, tmp_path):
     """Process N batches, stop, resume from checkpoint: final output set
     identical to the uninterrupted run (W7)."""
-    from data_harvesting_spark.streaming.pipeline import start_curate_job
+    from data_harvesting_spark.streaming.pipeline import (
+        start_curate_job_session_window,
+    )
     from data_harvesting_spark.streaming.sink import read_epoch_sink
 
     cfg = _cfg(str(tmp_path))
 
     # phase 1: stop after ~half the files
-    q = start_curate_job(spark, fixture_batches, cfg, available_now=False)
+    q = start_curate_job_session_window(
+        spark, fixture_batches, cfg, available_now=False
+    )
     import time
 
     deadline = time.time() + 60
@@ -109,7 +123,9 @@ def test_kill_and_resume_exactly_once(spark, fixture_batches, tmp_path):
     # phase 2: resume from the same checkpoint, drain everything
     from data_harvesting_spark.streaming.pipeline import drain
 
-    q2 = start_curate_job(spark, fixture_batches, cfg, available_now=False)
+    q2 = start_curate_job_session_window(
+        spark, fixture_batches, cfg, available_now=False
+    )
     drain(q2)
 
     got = read_epoch_sink(spark, cfg.sink_path).toPandas()
@@ -119,8 +135,11 @@ def test_kill_and_resume_exactly_once(spark, fixture_batches, tmp_path):
 
 
 def test_late_beyond_watermark_dropped(spark, tmp_path):
-    """A turn arriving beyond the watermark is dropped (W2/W6); within
-    watermark it sorts into its session."""
+    """A call+response pair arriving beyond the watermark is dropped
+    (W2/W6): it neither forms a second session nor duplicates the
+    response. The pair arrives two files after the watermark passed it —
+    the session-window operator filters late rows against the previous
+    micro-batch's watermark (see test_late_drop_counted_in_metrics)."""
     import numpy as np
 
     src = tmp_path / "late_src"
@@ -139,20 +158,36 @@ def test_late_beyond_watermark_dropped(spark, tmp_path):
         }
     )
     write_parquet_us(rows, str(src / "b0.parquet"))
-    # batch 2: a duplicate-text turn arriving very late (event time far
-    # before watermark) — must NOT resurrect; and a flush row
+    # b1: in-order heartbeat, so b2 is filtered against a watermark that
+    # has already passed the late pair
+    hb = pd.DataFrame(
+        {
+            "conv_id": ["hb"],
+            "turn_idx": np.array([0], dtype="int32"),
+            "role": ["user"],
+            "text": ["beat"],
+            "tool": [None],
+            "ts": [base + pd.Timedelta(minutes=1)],
+        }
+    )
+    write_parquet_us(hb, str(src / "b1.parquet"))
+    # b2: a curate-able pair with duplicate texts arriving very late
+    # (event time far before the watermark) — must NOT resurrect; and a
+    # flush row
     late = pd.DataFrame(
         {
-            "conv_id": ["c1", "flush"],
-            "turn_idx": np.array([4, 0], dtype="int32"),
-            "role": ["tool", "user"],
-            "text": ["result y", "z"],
-            "tool": ["search", None],
+            "conv_id": ["c1", "c1", "flush"],
+            "turn_idx": np.array([4, 5, 0], dtype="int32"),
+            "role": ["assistant", "tool", "user"],
+            "text": ["call search x", "result y", "z"],
+            "tool": ["search", "search", None],
             "ts": [base - pd.Timedelta(hours=5),
+                   base - pd.Timedelta(hours=5) + pd.Timedelta(seconds=10),
                    base + pd.Timedelta(hours=12)],
         }
     )
-    write_parquet_us(late, str(src / "b1.parquet"))
+    write_parquet_us(late, str(src / "b2.parquet"))
+    _force_arrival_order(src)
 
     from data_harvesting_spark.streaming.pipeline import (
         run_sessionized_stream_to_completion,
@@ -161,7 +196,7 @@ def test_late_beyond_watermark_dropped(spark, tmp_path):
     cfg = _cfg(str(tmp_path), watermark_delay="10 minutes")
     out = run_sessionized_stream_to_completion(spark, str(src), cfg).toPandas()
     out = out[out["conv_id"] == "c1"]
-    # exactly one curated pair; the late far-past turn was dropped, so it
+    # exactly one curated pair; the late far-past pair was dropped, so it
     # neither formed a second session nor duplicated the response
     assert len(out) == 1
     assert out.iloc[0]["call_turn_idx"] == 1
@@ -318,65 +353,6 @@ def test_latency_quantiles_stream_equals_batch(spark, fixture_batches, tmp_path)
     assert len(got) > 0
 
 
-def test_session_window_stream_equals_kernel_batch(spark, fixture_batches, tmp_path):
-    """The JVM session-window streaming runner (scale path) emits the same
-    curated set as the batch kernel runner — two independent streaming
-    architectures, one semantics."""
-    from data_harvesting_spark.streaming.pipeline import (
-        drain,
-        start_curate_job_session_window,
-    )
-    from data_harvesting_spark.streaming.sink import read_epoch_sink
-
-    cfg = _cfg(str(tmp_path))
-    q = start_curate_job_session_window(
-        spark, fixture_batches, cfg, available_now=False
-    )
-    drain(q)
-    got = read_epoch_sink(spark, cfg.sink_path).toPandas()
-    got = got[got["conv_id"] != "conv-flush"]
-    want = _batch_reference(spark, fixture_batches, cfg)
-    cols = [c for c in want.columns if c in set(got.columns)]
-    pd.testing.assert_frame_equal(_canon(got[cols]), _canon(want[cols]))
-    assert len(got) > 0
-
-
-def test_session_window_kill_and_resume(spark, fixture_batches, tmp_path):
-    """Kill-resume exactly-once for the session-window runner (W7): stop
-    mid-stream, resume from checkpoint, final output identical to the
-    uninterrupted batch reference."""
-    import time
-
-    from data_harvesting_spark.streaming.pipeline import (
-        drain,
-        start_curate_job_session_window,
-    )
-    from data_harvesting_spark.streaming.sink import read_epoch_sink
-
-    cfg = _cfg(str(tmp_path))
-    q = start_curate_job_session_window(
-        spark, fixture_batches, cfg, available_now=False
-    )
-    deadline = time.time() + 60
-    while time.time() < deadline:
-        if sum(p["numInputRows"] > 0 for p in q.recentProgress) >= 3:
-            break
-        time.sleep(0.5)
-    q.stop()
-    q.awaitTermination()
-
-    q2 = start_curate_job_session_window(
-        spark, fixture_batches, cfg, available_now=False
-    )
-    drain(q2)
-
-    got = read_epoch_sink(spark, cfg.sink_path).toPandas()
-    got = got[got["conv_id"] != "conv-flush"]
-    want = _batch_reference(spark, fixture_batches, cfg)
-    cols = [c for c in want.columns if c in set(got.columns)]
-    pd.testing.assert_frame_equal(_canon(got[cols]), _canon(want[cols]))
-
-
 def test_suppression_parity_across_runners(spark, fixture_batches, tmp_path):
     """With suppression on, the declarative keyed pipeline and the pandas
     kernel agree (P10 is the one genuinely sequential operator)."""
@@ -456,8 +432,8 @@ def _multisession_frame() -> pd.DataFrame:
 @pytest.fixture(scope="module")
 def multisession_batches(tmp_path_factory):
     """One file per session index (+ flush) so sessions of one conversation
-    close in DIFFERENT micro-batches — exercises the cross-batch cap state
-    (kernel) and cap ledger (session-window runner)."""
+    close in DIFFERENT micro-batches — exercises the cross-batch cap
+    ledger of the streaming curate job."""
     import time as _time
 
     d = tmp_path_factory.mktemp("multisession_src")
@@ -489,21 +465,18 @@ def test_conversation_cap_parity_all_paths(spark, multisession_batches, tmp_path
     """cap_scope='conversation' (reference semantics: per video = per
     conversation, harvest_service.py:175): a cap of 4 with 9 pairs spread
     over 3 sessions emits exactly 4 per conversation, numbered cumulatively
-    across sessions — identically in all four implementations (batch
-    kernel, declarative keyed, stateful-kernel stream, session-window
-    stream with cap ledger). Also pins the exact-gap boundary (mc-b)."""
+    across sessions — identically in all three implementations (batch
+    kernel, declarative keyed, streaming curate job with cap ledger). Also
+    pins the exact-gap boundary (mc-b)."""
     from data_harvesting_spark.operators.curate import curate_keyed
     from data_harvesting_spark.operators.curate_sessions import curate_sessions
     from data_harvesting_spark.operators.sessionize import sessionize
     from data_harvesting_spark.schema import TRANSCRIPT_SCHEMA
     from data_harvesting_spark.streaming.pipeline import (
-        drain,
         run_sessionized_stream_to_completion,
-        start_curate_job_session_window,
     )
-    from data_harvesting_spark.streaming.sink import read_epoch_sink
 
-    cfg = _cfg(str(tmp_path / "kern"), max_pairs_per_conv=4)
+    cfg = _cfg(str(tmp_path), max_pairs_per_conv=4)
     t = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(
         multisession_batches + "/*.parquet"
     )
@@ -541,29 +514,17 @@ def test_conversation_cap_parity_all_paths(spark, multisession_batches, tmp_path
             "response_turn_idx", "tool", "call_text", "response_text"]
     pd.testing.assert_frame_equal(_canon(got_keyed[cols]), _canon(want[cols]))
 
-    # 2. stateful-kernel streaming (cap cursor in state)
-    got_kernel = run_sessionized_stream_to_completion(
+    # 2. streaming curate job (cross-batch cap ledger)
+    got = run_sessionized_stream_to_completion(
         spark, multisession_batches, cfg
     ).toPandas()
-    got_kernel = got_kernel[got_kernel["conv_id"] != "conv-flush"]
-    pd.testing.assert_frame_equal(
-        _canon(got_kernel[cols]), _canon(want[cols])
-    )
-
-    # 3. session-window streaming (cross-batch cap ledger)
-    cfg_sw = _cfg(str(tmp_path / "sw"), max_pairs_per_conv=4)
-    q = start_curate_job_session_window(
-        spark, multisession_batches, cfg_sw, available_now=False
-    )
-    drain(q)
-    got_sw = read_epoch_sink(spark, cfg_sw.sink_path).toPandas()
-    got_sw = got_sw[got_sw["conv_id"] != "conv-flush"]
-    pd.testing.assert_frame_equal(_canon(got_sw[cols]), _canon(want[cols]))
+    got = got[got["conv_id"] != "conv-flush"]
+    pd.testing.assert_frame_equal(_canon(got[cols]), _canon(want[cols]))
 
 
 def test_conversation_suppression_carry_in_stream(spark, multisession_batches, tmp_path):
     """Conversation-scope suppression (P10): the suppression cursor carries
-    across session closes in the streaming kernel's state — output equals
+    across session closes in the curate job's cap ledger — output equals
     the batch kernel's single whole-conversation sweep even though the
     sessions close in different micro-batches."""
     from data_harvesting_spark.operators.curate_sessions import curate_sessions
@@ -587,24 +548,6 @@ def test_conversation_suppression_carry_in_stream(spark, multisession_batches, t
     ).toPandas()
     got = got[got["conv_id"] != "conv-flush"]
     pd.testing.assert_frame_equal(_canon(got), _canon(want))
-
-    # session-window runner: the same cursor rides the cap ledger
-    from data_harvesting_spark.streaming.pipeline import (
-        drain,
-        start_curate_job_session_window,
-    )
-    from data_harvesting_spark.streaming.sink import read_epoch_sink
-
-    cfg_sw = _cfg(
-        str(tmp_path / "sw"), suppress_turns_after_emit=2, max_pairs_per_conv=5
-    )
-    q = start_curate_job_session_window(
-        spark, multisession_batches, cfg_sw, available_now=False
-    )
-    drain(q)
-    got_sw = read_epoch_sink(spark, cfg_sw.sink_path).toPandas()
-    got_sw = got_sw[got_sw["conv_id"] != "conv-flush"]
-    pd.testing.assert_frame_equal(_canon(got_sw), _canon(want))
 
 
 def test_ledger_kill_and_resume_with_binding_cap(spark, multisession_batches, tmp_path):
@@ -655,8 +598,9 @@ def test_ledger_kill_and_resume_with_binding_cap(spark, multisession_batches, tm
 
 def test_min_pairs_session_scope_parity(spark, multisession_batches, tmp_path):
     """Session-scope min gate (P8): a 1-pair session is dropped when
-    min_pairs_per_conv=2, identically in the kernel and the declarative
-    keyed pipeline (ADVICE: curate_keyed previously ignored the gate)."""
+    min_pairs_per_conv=2, identically in the batch kernel and the
+    declarative keyed pipeline (ADVICE: curate_keyed previously ignored the
+    gate)."""
     from data_harvesting_spark.operators.curate import curate_keyed
     from data_harvesting_spark.operators.curate_sessions import curate_sessions
     from data_harvesting_spark.operators.sessionize import sessionize
@@ -683,10 +627,10 @@ def test_min_pairs_session_scope_parity(spark, multisession_batches, tmp_path):
 
 
 def test_conversation_min_gate_deferred_in_stream(spark, multisession_batches, tmp_path):
-    """Conversation-scope min gate (P8) in the kernel runner: emission is
-    deferred to the conversation's event-time timeout, so the gate sees the
-    TOTAL pair count — mc-tiny (4 pairs) is dropped whole under min=5 while
-    the 9-pair conversations emit, exactly as in batch."""
+    """Conversation-scope min gate (P8) in the streaming curate job:
+    below-gate pairs pool in the cap ledger's pending buffer, so the gate
+    sees the TOTAL pair count — mc-tiny (4 pairs) is dropped whole under
+    min=5 while the 9-pair conversations emit, exactly as in batch."""
     from data_harvesting_spark.operators.curate_sessions import curate_sessions
     from data_harvesting_spark.schema import TRANSCRIPT_SCHEMA
     from data_harvesting_spark.streaming.pipeline import (
@@ -710,17 +654,18 @@ def test_conversation_min_gate_deferred_in_stream(spark, multisession_batches, t
 
 
 def test_min_gate_failed_buffer_retained_for_pooling(spark, tmp_path_factory, tmp_path):
-    """r2 ADVICE: when the conversation timeout fires and the min gate
-    fails (nothing emitted), the kernel runner must RETAIN the buffered
-    pairs for ``cap_state_retention`` so a later session pools toward the
-    gate, exactly as batch pools the whole conversation.
+    """r2 ADVICE: when a conversation's session closes below the min gate
+    (nothing emitted), the curate job must RETAIN its pairs in the cap
+    ledger's pending pool for ``cap_state_retention`` so a later session
+    pools toward the gate, exactly as batch pools the whole conversation.
 
-    conv gf: 1-pair session, gate-fail timeout fires, then a second 1-pair
-    session arrives within the retention → min=2 is met by the POOLED total
-    → both pairs emit, batch-equal. conv gx: identical, but its second
-    session arrives after the retention expired (watermark passed
-    last+gap+retention first) → stays gated, the documented beyond-
-    retention divergence."""
+    conv gf: 1-pair session closes gated, then a second 1-pair session
+    arrives within the retention → min=2 is met by the POOLED total → both
+    pairs emit, batch-equal. conv gx: identical, but an earlier epoch
+    closes a session (hb at 100 min) past gx's last + gap + retention
+    (90 min 10 s), which evicts gx's ledger row and pending pair before
+    its second session arrives → gx stays gated, the documented
+    beyond-retention divergence from batch."""
     import time as _time
 
     from data_harvesting_spark.operators.curate_sessions import curate_sessions
@@ -744,13 +689,15 @@ def test_min_gate_failed_buffer_retained_for_pooling(spark, tmp_path_factory, tm
     files = [
         pair("gf", 0, base) + pair("gx", 0, base),
         hb(base + pd.Timedelta(hours=1)),
-        # timer batch: wm = base+50m > gate-fail timeouts (base+30m10s) —
-        # both convs hit the gate-fail retention branch here
+        # wm = base+50m passed both first sessions' ends (base+30m10s):
+        # both close below the gate and go to the pending pool
         hb(base + pd.Timedelta(minutes=65)),
         pair("gf", 2, base + pd.Timedelta(hours=1)),       # within retention
+        # a session past gx's retention end (base+1h30m10s) ...
+        hb(base + pd.Timedelta(minutes=100)),
+        # ... closes once wm = base+2h20m passes base+2h10m, in the same
+        # epoch as gf's second session: gf pools and emits, gx is evicted
         hb(base + pd.Timedelta(minutes=150)),
-        # wm = base+2h20m > gx's retention end (base+1h30m10s): gx evicted;
-        # gf's pooled conversation times out and emits
         hb(base + pd.Timedelta(minutes=155)),
         pair("gx", 2, base + pd.Timedelta(hours=3)),       # beyond retention
         [("conv-flush", 0, "user", "flush", "flush", base + pd.Timedelta(hours=12))],
@@ -777,15 +724,17 @@ def test_min_gate_failed_buffer_retained_for_pooling(spark, tmp_path_factory, tm
 
     got_gf = got[got["conv_id"] == "gf"]
     pd.testing.assert_frame_equal(_canon(got_gf), _canon(want_gf))
-    # beyond the retention the stream (by documented design) keeps gx gated
+    # batch pools gx's two sessions past the gate; beyond the retention the
+    # stream (by documented design) keeps gx gated
+    assert len(want[want["conv_id"] == "gx"]) == 2
     assert len(got[got["conv_id"] == "gx"]) == 0
     assert set(got["conv_id"]) == {"gf"}
 
 
 def test_session_scope_stream_parity(spark, multisession_batches, tmp_path):
     """cap_scope='session': each session budgets/numbers independently —
-    kernel stream == batch kernel on the multi-session fixture (the
-    non-default scope stays exact too)."""
+    stream == batch kernel on the multi-session fixture (the non-default
+    scope stays exact too)."""
     from data_harvesting_spark.operators.curate_sessions import curate_sessions
     from data_harvesting_spark.schema import TRANSCRIPT_SCHEMA
     from data_harvesting_spark.streaming.pipeline import (
@@ -817,43 +766,63 @@ def test_streaming_config_rejections(tmp_path):
     base = dict(
         sink_path=str(tmp_path / "s"), checkpoint_dir=str(tmp_path / "c")
     )
-    # conversation-scope min gate: kernel defers emission to the timeout;
-    # since r3 the session-window runner pools below-gate pairs in a
-    # pending buffer — BOTH accept the combination now
-    validate_config(
-        HarvestConfig(min_pairs_per_conv=2, **base),
-        streaming_runner="session_window",
-    )
-    validate_config(
-        HarvestConfig(min_pairs_per_conv=2, **base), streaming_runner="kernel"
-    )
+    # conversation-scope min gate: the curate job pools below-gate pairs
+    # in a pending buffer beside its cap ledger
+    validate_config(HarvestConfig(min_pairs_per_conv=2, **base))
     with pytest.raises(ConfigError):
         validate_config(HarvestConfig(cap_scope="bogus", **base))
     with pytest.raises(ConfigError):
         validate_config(
             HarvestConfig(max_pairs_per_conv=2, min_pairs_per_conv=3, **base)
         )
-    # fine: kernel carries the suppression cursor in state; session-window
-    # carries it in the cap ledger
-    validate_config(
-        HarvestConfig(suppress_turns_after_emit=3, **base),
-        streaming_runner="kernel",
-    )
-    validate_config(
-        HarvestConfig(suppress_turns_after_emit=3, **base),
-        streaming_runner="session_window",
-    )
+    # fine: the suppression cursor rides the cap ledger
+    validate_config(HarvestConfig(suppress_turns_after_emit=3, **base))
     # fine: session scope closes atomically
     validate_config(
-        HarvestConfig(cap_scope="session", min_pairs_per_conv=2, **base),
-        streaming_runner="session_window",
+        HarvestConfig(cap_scope="session", min_pairs_per_conv=2, **base)
     )
+
+
+def test_write_stream_only_in_start():
+    """Every streaming job starts through ``pipeline._start``: the
+    writeStream/checkpoint/trigger/foreachBatch block exists once, so no
+    job can drift from the shared start contract (late counter, trigger,
+    checkpoint). Fails on any mention of writeStream outside ``_start``."""
+    import ast
+    import pathlib
+
+    import data_harvesting_spark.streaming as streaming_pkg
+
+    pkg = pathlib.Path(streaming_pkg.__file__).parent
+    start_lines = set()
+    stray = []
+    for path in sorted(pkg.glob("*.py")):
+        src = path.read_text()
+        tree = ast.parse(src)
+        if path.name == "pipeline.py":
+            for n in tree.body:
+                if isinstance(n, ast.FunctionDef) and n.name == "_start":
+                    start_lines = set(range(n.lineno, n.end_lineno + 1))
+        for no, line in enumerate(src.splitlines(), 1):
+            if "writeStream" in line and not (
+                path.name == "pipeline.py" and no in start_lines
+            ):
+                stray.append(f"{path.name}:{no}")
+    assert not stray, f"writeStream outside pipeline._start: {stray}"
+    assert start_lines, "pipeline._start not found"
 
 
 def test_late_drop_counted_in_metrics(spark, tmp_path):
     """W6: rows dropped beyond the watermark surface in progress metrics
-    (numRowsDroppedByWatermark) — the reference has no late-data concept,
-    the graft must account for every dropped row."""
+    (``lateDropped`` = the session-window operator's
+    numRowsDroppedByWatermark) — the reference has no late-data concept,
+    the graft must account for every dropped row.
+
+    The operator filters late rows against the PREVIOUS micro-batch's
+    watermark, so both sides of that lag are pinned: b1's pair is behind
+    the watermark only from the batch right after the watermark passed it
+    — kept (0 dropped) and curated as its own closed session; b2's pair is
+    still behind it one batch later — dropped, and both rows counted."""
     import json
 
     import numpy as np
@@ -866,38 +835,57 @@ def test_late_drop_counted_in_metrics(spark, tmp_path):
     src = tmp_path / "late_metrics_src"
     src.mkdir()
     base = pd.Timestamp("2026-01-01 00:00:00")
-    b0 = pd.DataFrame(
-        {
-            "conv_id": ["c1", "c1"],
-            "turn_idx": np.array([0, 1], dtype="int32"),
-            "role": ["assistant", "tool"],
-            "text": ["call search q", "result r"],
-            "tool": ["search", "search"],
-            "ts": [base, base + pd.Timedelta(seconds=10)],
-        }
-    )
-    write_parquet_us(b0, str(src / "b0.parquet"))
-    b1 = pd.DataFrame(
-        {
-            "conv_id": ["c1", "flush"],
-            "turn_idx": np.array([2, 0], dtype="int32"),
-            "role": ["tool", "user"],
-            "text": ["stale", "z"],
-            "tool": ["search", "go"],
-            "ts": [base - pd.Timedelta(hours=9),  # far beyond watermark
-                   base + pd.Timedelta(hours=12)],
-        }
-    )
-    write_parquet_us(b1, str(src / "b1.parquet"))
 
-    from data_harvesting_spark.streaming.pipeline import drain, start_curate_job
+    def rows(conv, idx, role, text, tool, ts):
+        return pd.DataFrame(
+            {
+                "conv_id": conv,
+                "turn_idx": np.array(idx, dtype="int32"),
+                "role": role,
+                "text": text,
+                "tool": tool,
+                "ts": ts,
+            }
+        )
 
-    cfg = _cfg(str(tmp_path), watermark_delay="10 minutes")
-    q = start_curate_job(spark, str(src), cfg, available_now=False)
-    drain(q)
-    # kernel path: applyInPandasWithState does NOT pre-filter late rows —
-    # the handler drops them and counts via the accumulator
-    assert q.late_counter.value >= 1
+    def late_pair(idx0, t0):
+        return rows(["c1", "c1"], [idx0, idx0 + 1], ["assistant", "tool"],
+                    [f"call search {idx0}", f"result {idx0}"],
+                    ["search", "search"], [t0, t0 + pd.Timedelta(seconds=10)])
+
+    write_parquet_us(late_pair(0, base), str(src / "b0.parquet"))
+    # both late pairs lie far behind the watermark b0 sets (base - 9m50s)
+    write_parquet_us(late_pair(2, base - pd.Timedelta(hours=9)),
+                     str(src / "b1.parquet"))
+    write_parquet_us(late_pair(4, base - pd.Timedelta(hours=8)),
+                     str(src / "b2.parquet"))
+    write_parquet_us(
+        rows(["flush"], [0], ["user"], ["z"], ["go"],
+             [base + pd.Timedelta(hours=12)]),
+        str(src / "b3.parquet"),
+    )
+    _force_arrival_order(src)
+
+    metrics_path = str(tmp_path / "metrics.jsonl")
+    listener = attach_progress_logger(spark, metrics_path)
+    try:
+        cfg = _cfg(str(tmp_path), watermark_delay="10 minutes")
+        got = run_sessionized_stream_to_completion(
+            spark, str(src), cfg
+        ).toPandas()
+    finally:
+        spark.streams.removeListener(listener)
+
+    lines = [json.loads(l) for l in open(metrics_path)]
+    dropped = {
+        p["batchId"]: p["lateDropped"] for p in lines if p["event"] == "progress"
+    }
+    # one data batch per file: b0..b3 are batches 0..3
+    assert [dropped[b] for b in range(4)] == [0, 0, 2, 0], dropped
+    assert sum(dropped.values()) == 2
+    c1 = got[got["conv_id"] == "c1"]
+    assert sorted(c1["response_turn_idx"]) == [1, 3]
+    assert set(c1["window_start"]) == {base, base - pd.Timedelta(hours=9)}
 
 
 def test_merge_sink_idempotent_replay(spark, fixture_batches, tmp_path):
@@ -1591,12 +1579,13 @@ def test_neardup_stream_kill_and_resume(spark, neardup_batches, tmp_path):
 def test_conversation_min_gate_pooled_in_session_window_runner(
     spark, multisession_batches, tmp_path
 ):
-    """r3: the session-window runner now implements the conversation-scope
-    min gate by POOLING below-gate pairs in a pending buffer beside the
-    cap ledger. mc-tiny's 1-pair first session (closing in an earlier
-    epoch) is withheld, then emitted together with the second session once
-    the pooled total passes min=2 — cumulative numbering from the earlier
-    window, batch-equal. Under min=5 the conversation never emits."""
+    """The curate job implements the conversation-scope min gate by
+    POOLING below-gate pairs in a pending buffer beside the cap ledger.
+    mc-tiny's 1-pair first session (closing in an earlier epoch) is
+    withheld, then emitted together with the second session once the
+    pooled total passes min=2 — cumulative numbering from the earlier
+    window, batch-equal. (min=5, where mc-tiny never emits, is
+    test_conversation_min_gate_deferred_in_stream.)"""
     from data_harvesting_spark.operators.curate_sessions import curate_sessions
     from data_harvesting_spark.schema import TRANSCRIPT_SCHEMA
     from data_harvesting_spark.streaming.pipeline import (
@@ -1626,20 +1615,6 @@ def test_conversation_min_gate_pooled_in_session_window_runner(
     got = read_epoch_sink(spark, cfg.sink_path).toPandas()
     got = got[got["conv_id"] != "conv-flush"]
     pd.testing.assert_frame_equal(_canon(got[cols]), _canon(want[cols]))
-
-    # min=5: mc-tiny (4 pairs total) stays gated forever; 9-pair convs emit
-    cfg5 = _cfg(str(tmp_path / "m5"), min_pairs_per_conv=5)
-    want5 = curate_sessions(t, cfg5).toPandas()
-    want5 = want5[want5["conv_id"] != "conv-flush"]
-    assert "mc-tiny" not in set(want5["conv_id"])
-
-    q5 = start_curate_job_session_window(
-        spark, multisession_batches, cfg5, available_now=False
-    )
-    drain(q5)
-    got5 = read_epoch_sink(spark, cfg5.sink_path).toPandas()
-    got5 = got5[got5["conv_id"] != "conv-flush"]
-    pd.testing.assert_frame_equal(_canon(got5[cols]), _canon(want5[cols]))
 
 
 def test_min_gate_pending_kill_and_resume(spark, multisession_batches, tmp_path):
