@@ -7,6 +7,14 @@ comparisons are stable), local cores and shuffle partitions from
 ``SPARK_GRAFT_CPUS``, else the host's ``os.cpu_count()`` — on a real cluster
 this would be left to AQE + `spark.sql.shuffle.partitions` sized to
 executor cores.
+
+Python workers: every session forks its Python workers from
+``data_harvesting_spark._pydaemon`` (``spark.python.daemon.module``), a
+wrapper around ``pyspark.daemon`` that stops each task from re-reading
+Spark's own zip archives (``pyspark.zip``, py4j) when pyspark invalidates
+import caches, which cost ~0.2 CPU-s per Python task.  The package root goes on the workers' ``PYTHONPATH``
+(``spark.executorEnv.PYTHONPATH``) so the daemon module, and the engine's
+UDFs pickled by reference, import whatever the driver's working directory.
 """
 
 from __future__ import annotations
@@ -14,6 +22,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -48,6 +58,8 @@ def get_spark(
             "RocksDBStateStoreProvider",
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "data_harvesting_spark._pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

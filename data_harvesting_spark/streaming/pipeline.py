@@ -1059,7 +1059,11 @@ def start_latency_quantiles_job(
 
 def drain(q, idle_seconds: float = 3.0, timeout: float = 180.0) -> None:
     """Run a ProcessingTime-triggered query until it has consumed all
-    available input AND gone idle (no batch progress) for ``idle_seconds``.
+    available input AND gone idle for ``idle_seconds``: no new batch, and
+    ``q.status`` showing no data available since a trigger ended with no
+    data and no batch to run. That covers a query whose last batch was the
+    no-data batch (watermark advance / timer flush) and a resumed query
+    that finds no input left, which runs no batch at all.
 
     A processing-time query never stops by itself: event-time timers fire
     and sessions close in the no-data micro-batch that runs after the
@@ -1072,24 +1076,21 @@ def drain(q, idle_seconds: float = 3.0, timeout: float = 180.0) -> None:
 
     deadline = time.time() + timeout
     last_batch = None
-    rows_seen = 0
     idle_since = None
     while time.time() < deadline:
         p = q.lastProgress
-        if p is None:
+        if p is None:  # still initialising, or the first batch is running
             time.sleep(0.25)
             continue
-        bid = p["batchId"]
-        if bid != last_batch:
-            rows_seen += p["numInputRows"]
-            last_batch = bid
+        status = q.status
+        if p["batchId"] != last_batch or status["isDataAvailable"]:
+            last_batch = p["batchId"]
             idle_since = None
-        elif rows_seen > 0 and p["numInputRows"] == 0:
-            # data was consumed AND the most recent batch was a no-data
-            # batch (watermark advance / timer flush) — now idle = done
-            idle_since = idle_since or time.time()
-            if time.time() - idle_since >= idle_seconds:
-                break
+        elif idle_since is None and not status["isTriggerActive"]:
+            # later triggers only poll the source: the clock keeps running
+            idle_since = time.time()
+        elif idle_since and time.time() - idle_since >= idle_seconds:
+            break
         time.sleep(0.25)
     q.stop()
     q.awaitTermination()

@@ -733,6 +733,38 @@ def test_scd2_stream_kill_and_resume(spark, scd2_batches, tmp_path):
     assert got == _batch_scd2_closed(spark, scd2_batches)
 
 
+def test_drain_returns_when_resumed_query_finds_no_input(
+    spark, scd2_batches, tmp_path
+):
+    """A query resumed after its first run consumed every file runs no
+    batch at all; drain() must still see it idle and return, not wait out
+    its deadline. The resumed run writes nothing more."""
+    import time as _time
+
+    from data_harvesting_spark.streaming.pipeline import (
+        drain,
+        start_scd2_stream_job,
+    )
+    from data_harvesting_spark.streaming.sink import read_epoch_sink
+
+    sink = str(tmp_path / "ssink")
+    ckpt = str(tmp_path / "sckpt")
+    drain(start_scd2_stream_job(
+        spark, scd2_batches, sink, ckpt, available_now=False
+    ))
+    first = sorted(read_epoch_sink(spark, sink).collect())
+
+    q = start_scd2_stream_job(
+        spark, scd2_batches, sink, ckpt, available_now=False
+    )
+    idle_seconds = 3.0
+    t0 = _time.time()
+    drain(q, idle_seconds=idle_seconds)
+    assert _time.time() - t0 < idle_seconds + 10
+    assert not [p for p in q.recentProgress if p["numInputRows"]]
+    assert sorted(read_epoch_sink(spark, sink).collect()) == first
+
+
 # ------------------------------------------------- Z-order layout
 def test_zorder_prunes_both_dimensions(spark):
     """The layout claim, measured: cut the z-sorted table into 256-row
