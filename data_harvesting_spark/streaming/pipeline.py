@@ -1092,8 +1092,42 @@ def drain(q, idle_seconds: float = 3.0, timeout: float = 180.0) -> None:
         elif idle_since and time.time() - idle_since >= idle_seconds:
             break
         time.sleep(0.25)
+    stop(q, timeout=None)
+
+
+def stop(q, timeout: float | None = 30.0) -> None:
+    """Stop ``q`` and wait up to ``timeout`` seconds (``None``: no limit)
+    for it to end; raise ``TimeoutError`` if it has not.
+
+    ``q.stop()`` interrupts the query thread. When the interrupt lands
+    inside a blocking call Spark wraps (for example a block-manager RPC
+    while a batch is planned), the query ends with a
+    ``StreamingQueryException`` whose root cause is that
+    ``InterruptedException``, although the stop was clean: a batch counts
+    as done only once its commit-log entry is written, so a restart from
+    the checkpoint replays whatever the stop cut short. Only that
+    failure, on a query that was still running when stopped, is swallowed;
+    any other failure re-raises.
+    """
+    from pyspark.errors import StreamingQueryException
+
+    was_active = q.isActive
     q.stop()
-    q.awaitTermination()
+    try:
+        ended = q.awaitTermination(timeout)  # None when waited without limit
+    except StreamingQueryException as e:
+        if not (was_active and _root_cause(e._origin) == "java.lang.InterruptedException"):
+            raise
+        return
+    if ended is False:
+        raise TimeoutError(f"query {q.id} still running {timeout}s after stop()")
+
+
+def _root_cause(throwable) -> str:
+    """Class name of the last cause in a Java throwable's cause chain."""
+    while throwable.getCause() is not None:
+        throwable = throwable.getCause()
+    return throwable.getClass().getName()
 
 
 def run_sessionized_stream_to_completion(

@@ -134,6 +134,7 @@ def test_outer_join_stream_kill_and_resume(spark, outer_batches, tmp_path):
     from data_harvesting_spark.streaming.pipeline import (
         drain,
         start_unmatched_errors_stream_job,
+        stop,
     )
     from data_harvesting_spark.streaming.sink import read_epoch_sink
 
@@ -148,8 +149,7 @@ def test_outer_join_stream_kill_and_resume(spark, outer_batches, tmp_path):
         if any((p.get("numInputRows") or 0) > 0 for p in q.recentProgress):
             break
         _time.sleep(0.3)
-    q.stop()
-    q.awaitTermination(30)
+    stop(q)
 
     q2 = start_unmatched_errors_stream_job(
         spark, outer_batches, sink, ckpt,

@@ -444,6 +444,7 @@ def test_quantile_sketch_stream_kill_and_resume(
     from data_harvesting_spark.streaming.pipeline import (
         drain,
         start_quantile_sketch_stream_job,
+        stop,
     )
     from data_harvesting_spark.streaming.sink import read_epoch_sink
 
@@ -458,8 +459,7 @@ def test_quantile_sketch_stream_kill_and_resume(
         if any((p.get("numInputRows") or 0) > 0 for p in prog):
             break
         _time.sleep(0.3)
-    q.stop()
-    q.awaitTermination(30)
+    stop(q)
 
     q2 = start_quantile_sketch_stream_job(
         spark, qsketch_batches, sink, ckpt, available_now=False
@@ -572,6 +572,7 @@ def test_followups_stream_kill_and_resume(spark, followup_batches, tmp_path):
     from data_harvesting_spark.streaming.pipeline import (
         drain,
         start_followups_stream_job,
+        stop,
     )
     from data_harvesting_spark.streaming.sink import read_epoch_sink
 
@@ -585,8 +586,7 @@ def test_followups_stream_kill_and_resume(spark, followup_batches, tmp_path):
         if any((p.get("numInputRows") or 0) > 0 for p in q.recentProgress):
             break
         _time.sleep(0.3)
-    q.stop()
-    q.awaitTermination(30)
+    stop(q)
 
     q2 = start_followups_stream_job(
         spark, followup_batches, sink, ckpt, available_now=False
@@ -703,6 +703,7 @@ def test_scd2_stream_kill_and_resume(spark, scd2_batches, tmp_path):
     from data_harvesting_spark.streaming.pipeline import (
         drain,
         start_scd2_stream_job,
+        stop,
     )
     from data_harvesting_spark.streaming.sink import read_epoch_sink
 
@@ -716,8 +717,7 @@ def test_scd2_stream_kill_and_resume(spark, scd2_batches, tmp_path):
         if any((p.get("numInputRows") or 0) > 0 for p in q.recentProgress):
             break
         _time.sleep(0.3)
-    q.stop()
-    q.awaitTermination(30)
+    stop(q)
 
     q2 = start_scd2_stream_job(
         spark, scd2_batches, sink, ckpt, available_now=False
@@ -763,6 +763,66 @@ def test_drain_returns_when_resumed_query_finds_no_input(
     assert _time.time() - t0 < idle_seconds + 10
     assert not [p for p in q.recentProgress if p["numInputRows"]]
     assert sorted(read_epoch_sink(spark, sink).collect()) == first
+
+
+def test_stop_swallows_only_its_own_interrupt():
+    """stop() treats a query that ended with the InterruptedException its
+    own stop raised as stopped cleanly; any other failure, a failure of a
+    query that had already ended, and a query that does not end re-raise.
+    Spark-free: stand-in query and Java throwable chain."""
+    from pyspark.errors import StreamingQueryException
+
+    from data_harvesting_spark.streaming.pipeline import stop
+
+    class Throwable:
+        def __init__(self, name, cause=None):
+            self.name, self.cause = name, cause
+
+        def getCause(self):
+            return self.cause
+
+        def getClass(self):
+            return self
+
+        def getName(self):
+            return self.name
+
+    def failure(root):
+        e = StreamingQueryException.__new__(StreamingQueryException)
+        e._origin = Throwable(
+            "org.apache.spark.sql.streaming.StreamingQueryException",
+            Throwable("org.apache.spark.SparkException", Throwable(root)),
+        )
+        return e
+
+    class Query:
+        id = "q"
+
+        def __init__(self, error=None, active=True, ends=True):
+            self.isActive, self.error, self.ends = active, error, ends
+            self.stopped = False
+
+        def stop(self):
+            self.stopped = True
+
+        def awaitTermination(self, timeout=None):
+            if self.error is not None:
+                raise self.error
+            return self.ends if timeout is not None else None
+
+    q = Query()
+    stop(q)
+    assert q.stopped
+    stop(Query(), timeout=None)
+    stop(Query(failure("java.lang.InterruptedException")))
+    for q in (
+        Query(failure("java.io.IOException")),
+        Query(failure("java.lang.InterruptedException"), active=False),
+    ):
+        with pytest.raises(StreamingQueryException):
+            stop(q)
+    with pytest.raises(TimeoutError):
+        stop(Query(ends=False))
 
 
 # ------------------------------------------------- Z-order layout
@@ -979,6 +1039,7 @@ def test_sliding_hll_stream_kill_and_resume(spark, hllwin_batches, tmp_path):
     from data_harvesting_spark.streaming.pipeline import (
         drain,
         start_sliding_hll_stream_job,
+        stop,
     )
     from data_harvesting_spark.streaming.sink import read_epoch_sink
 
@@ -992,8 +1053,7 @@ def test_sliding_hll_stream_kill_and_resume(spark, hllwin_batches, tmp_path):
         if any((p.get("numInputRows") or 0) > 0 for p in q.recentProgress):
             break
         _time.sleep(0.3)
-    q.stop()
-    q.awaitTermination(30)
+    stop(q)
 
     q2 = start_sliding_hll_stream_job(
         spark, hllwin_batches, sink, ckpt, available_now=False
@@ -1579,6 +1639,7 @@ def test_dq_monitor_stream_kill_and_resume(spark, dq_batches, tmp_path):
     from data_harvesting_spark.streaming.pipeline import (
         drain,
         start_dq_monitor_stream_job,
+        stop,
     )
     from data_harvesting_spark.streaming.sink import read_epoch_sink
 
@@ -1593,8 +1654,7 @@ def test_dq_monitor_stream_kill_and_resume(spark, dq_batches, tmp_path):
         if any((p.get("numInputRows") or 0) > 0 for p in prog):
             break
         _time.sleep(0.3)
-    q.stop()
-    q.awaitTermination(30)
+    stop(q)
 
     q2 = start_dq_monitor_stream_job(
         spark, dq_batches, sink, ckpt, available_now=False
@@ -2003,6 +2063,7 @@ def test_enrich_stream_kill_and_resume(spark, enrich_src, tmp_path):
 
     from data_harvesting_spark.streaming.pipeline import (
         start_enrich_stream_job,
+        stop,
     )
     from data_harvesting_spark.streaming.sink import read_epoch_sink
 
@@ -2021,8 +2082,7 @@ def test_enrich_stream_kill_and_resume(spark, enrich_src, tmp_path):
         ):
             break
         _time.sleep(0.3)
-    q.stop()
-    q.awaitTermination(30)
+    stop(q)
 
     q2 = start_enrich_stream_job(spark, enrich_src, dim, sink, ckpt)
     q2.awaitTermination(120)

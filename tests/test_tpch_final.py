@@ -11,6 +11,7 @@ from __future__ import annotations
 import datetime as dt
 import math
 
+import numpy as np
 from pyspark.sql import functions as F  # noqa: F401 — parity with sibling files
 
 from tests.conftest import SF_SMOKE
@@ -221,7 +222,9 @@ def test_hybrid_rrf_fusion_semantics(spark):
     exactly Σ 1/(60+r) over the retrievers whose top-20 contains the
     neighbor — brute-recomputed from scratch ranks in Python — and the
     two metrics genuinely disagree on the fixture (fusion is not a
-    no-op relabeling of the cosine ranking)."""
+    no-op relabeling of the cosine ranking). Adjacent scores of each
+    metric are more than a few ulps apart, so no near-tie can rank
+    differently in DuckDB and Spark."""
     import math
 
     from data_harvesting_spark.operators.similarity import hybrid_rrf_topk
@@ -247,12 +250,23 @@ def test_hybrid_rrf_fusion_semantics(spark):
     def l2(a, b):
         return math.sqrt(sum((x - y) ** 2 for x, y in zip(a, b)))
 
+    def assert_ulp_margin(qid, scores):
+        # Spark folds the metrics by hand, DuckDB with list_* functions:
+        # adjacent scores within a few ulps could order differently per
+        # engine and flip the fused output; ranks past depth + 1 never count
+        s = np.array(scores[:21])
+        gap = np.abs(np.diff(s))
+        ulp = np.spacing(np.maximum(np.abs(s[:-1]), np.abs(s[1:])))
+        assert (gap > 4 * ulp).all(), (qid, s[:-1][gap <= 4 * ulp])
+
     want = set()
     for qid in qids:
         qv = rows[qid]
         others = [n for n in rows if n != qid]
         by_cos = sorted(others, key=lambda n: (-cos(qv, rows[n]), n))
         by_l2 = sorted(others, key=lambda n: (l2(qv, rows[n]), n))
+        assert_ulp_margin(qid, [cos(qv, rows[n]) for n in by_cos])
+        assert_ulp_margin(qid, [l2(qv, rows[n]) for n in by_l2])
         r_cos = {n: i + 1 for i, n in enumerate(by_cos)}
         r_l2 = {n: i + 1 for i, n in enumerate(by_l2)}
         rrf = {}

@@ -88,6 +88,7 @@ def test_windowed_topk_kill_and_resume(spark, fixture_batches, tmp_path):
     from data_harvesting_spark.streaming.pipeline import (
         drain,
         start_windowed_topk_stream_job,
+        stop,
     )
     from data_harvesting_spark.streaming.sink import read_epoch_sink
 
@@ -102,8 +103,7 @@ def test_windowed_topk_kill_and_resume(spark, fixture_batches, tmp_path):
         if any((p.get("numInputRows") or 0) > 0 for p in q.recentProgress):
             break
         _time.sleep(0.3)
-    q.stop()
-    q.awaitTermination(30)
+    stop(q)
 
     q2 = start_windowed_topk_stream_job(
         spark, fixture_batches, cfg, sink, ckpt, available_now=False
